@@ -2,9 +2,15 @@
 
 The job writes its output partitioned by a stable bucket column
 (``pmod(xxhash64(image_id), n_buckets)`` — content-addressed, so
-identical for any input partitioning).  A JSON manifest beside the
-output records, per completed bucket: row counts, keep/drop counts and
-the dropped-by-rule histogram (the lineage counters of BASELINE.json).
+identical for any input partitioning).  The output layout is one
+parquet file per bucket (``_bucket=<b>/part-*.parquet``): the write is
+clustered by bucket into at most ``defaultParallelism`` tasks, each
+writing whole buckets.  The bucket is therefore the unit of resume, of
+write work and of output file.  A JSON manifest beside the output
+records, per completed bucket: row counts, keep/drop counts and the
+dropped-by-rule histogram (the lineage counters of BASELINE.json).  The
+counters come from a second pass over the same deterministic frame, so
+the written rows are not cached a second time.
 
 Resume semantics: buckets listed in the manifest are skipped entirely
 (their input rows are filtered out before any work happens — predicate
@@ -59,6 +65,11 @@ def run_checkpointed(
 ) -> dict:
     """Write ``df`` to ``output_dir`` partitioned by bucket, skipping
     buckets already recorded in the manifest.  Returns the manifest.
+
+    Each pending bucket becomes exactly one parquet file, written by one
+    of ``min(pending buckets, defaultParallelism)`` tasks.  ``df`` must
+    be deterministic: the per-bucket counters are computed by a second
+    pass over it (two aggregation jobs), not from a cache of the write.
     """
     spark = df.sparkSession
 
@@ -78,18 +89,31 @@ def run_checkpointed(
     work = df.withColumn("_bucket", bucket_col(id_col, n_buckets))
     if done:
         work = work.where(~F.col("_bucket").isin([int(b) for b in done]))
-    work = work.persist()
 
+    # Cluster by bucket before the partitioned write: unclustered, every
+    # scan task opens one writer per bucket it sees (tasks x buckets
+    # small files, each paying writer set-up and commit).  Hashing
+    # _bucket into an explicit count sends each bucket to exactly one
+    # task, so each bucket is one file, written in one wave.  The count
+    # must be explicit: with none, AQE coalesces the exchange into a
+    # single task that writes every bucket serially.
+    n_tasks = min(len(pending), spark.sparkContext.defaultParallelism)
     try:
         (
-            work.write.mode("overwrite")
+            work.repartition(n_tasks, "_bucket")
+            .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(output_dir)
         )
     finally:
         spark.conf.set(_POM, prior_pom)
 
-    # lineage counters per bucket, computed from the same cached frame
+    # lineage counters per bucket: a second pass over the same
+    # deterministic frame, not cached here (the pipeline's frame already
+    # reads caption_scores' cached feats, so a cache would only add a
+    # materialisation).  The two aggregations stay separate: one fused
+    # groupBy(_bucket, keep|reason) needs more peak execution memory
+    # than both together.
     aggs = [F.count(F.lit(1)).alias("rows")]
     if keep_col in work.columns:
         aggs.append(F.sum(F.when(F.col(keep_col), 1).otherwise(0)).alias("kept"))
@@ -103,7 +127,6 @@ def run_checkpointed(
             .collect()
         ):
             reasons.setdefault(int(r["_bucket"]), {})[r[reason_col]] = r["count"]
-    work.unpersist()
 
     now = time.time()
     for b in pending:

@@ -8,12 +8,13 @@ Usage (cluster):
 Reads the image+caption table (``--format iceberg``: via the
 iceberg-spark runtime jar when present, else the pure-python metadata
 reader in sparkclean.iceberg; parquet otherwise), runs the fused
-keep/drop + scrub pipeline, writes bucket-partitioned output with the
-checkpoint manifest + lineage counters beside it, and prints the
-counter summary.  Re-running with the same ``--output`` resumes from
-the manifest (completed buckets are skipped).  With ``--format
-iceberg`` each run additionally commits the newly completed buckets as
-an Iceberg snapshot on the output, counters in the snapshot summary.
+keep/drop + scrub pipeline, writes bucket-partitioned output (one
+parquet file per bucket) with the checkpoint manifest + lineage
+counters beside it, and prints the counter summary.  Re-running with
+the same ``--output`` resumes from the manifest (completed buckets are
+skipped).  With ``--format iceberg`` each run additionally commits the
+newly completed buckets as an Iceberg snapshot on the output, counters
+in the snapshot summary.
 """
 
 from __future__ import annotations
@@ -27,7 +28,11 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--input", required=True, help="input table path")
     p.add_argument("--output", required=True, help="output directory")
     p.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
-    p.add_argument("--buckets", type=int, default=64, help="checkpoint buckets")
+    p.add_argument(
+        "--buckets", type=int, default=64,
+        help="checkpoint buckets: the unit of resume; each bucket is one "
+        "output file, and the bucket count caps the write tasks",
+    )
     p.add_argument("--id-col", default="image_id")
     p.add_argument("--text-col", default="caption")
     p.add_argument(

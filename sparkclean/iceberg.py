@@ -587,12 +587,23 @@ def publish_checkpoint(spark, output_dir: str, location: str | None = None) -> d
     snapshot" (BASELINE.json).  Idempotent across resume rounds: only
     files not yet in the table are committed, so each resume adds one
     snapshot covering its newly completed buckets.  Returns the new
-    snapshot, or None if there is nothing new to commit."""
+    snapshot, or None if there is nothing new to commit.
+
+    Only buckets the manifest records as complete are registered.  A run
+    killed after its bucket write but before the manifest save leaves
+    files the counters do not cover, and the resume rewrites (deletes)
+    them; registering them would make ``added-records`` disagree with
+    the summary's counters and leave the table pointing at deleted
+    files."""
     from .checkpoint import load_manifest
 
     location = location or output_dir
     manifest = load_manifest(output_dir)
-    files = sorted(glob.glob(os.path.join(output_dir, "_bucket=*", "*.parquet")))
+    files = sorted(
+        f
+        for b in manifest["buckets"]
+        for f in glob.glob(os.path.join(output_dir, f"_bucket={int(b)}", "*.parquet"))
+    )
     meta = load_metadata(location)
     if meta is not None:
         have = {f["file_path"] for f in plan_files(location)}

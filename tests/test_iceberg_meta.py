@@ -241,6 +241,50 @@ def test_publish_checkpoint_counters_and_idempotency(spark, tmp_path):
     assert publish_checkpoint(spark, out) is None
 
 
+def test_publish_checkpoint_skips_buckets_missing_from_manifest(spark, tmp_path):
+    """Files of a bucket the manifest does not record as complete (left
+    by a run killed before its manifest save) are not registered, so
+    added-records matches the summary's counters; the resume rewrites
+    that bucket and the next publish adds only its new file."""
+    import glob as _glob
+
+    from sparkclean.checkpoint import MANIFEST, load_manifest, run_checkpointed
+    from sparkclean.iceberg import publish_checkpoint
+
+    df = spark.range(50).select(
+        F.col("id").alias("image_id"),
+        (F.col("id") % 2 == 0).alias("keep"),
+        F.when(F.col("id") % 2 == 1, F.lit("low_quality")).alias("drop_reason"),
+    )
+    out = str(tmp_path / "ckpt")
+    run_checkpointed(df, out, id_col="image_id", n_buckets=4)
+    m = load_manifest(out)
+    gone = m["buckets"].pop("3")
+    assert gone["rows"] > 0
+    c = m["counters"]
+    c["rows_scored"] -= gone["rows"]
+    c["rows_kept"] -= gone["kept"]
+    for k, v in gone["dropped_by_rule"].items():
+        c["dropped_by_rule"][k] -= v
+    with open(os.path.join(out, MANIFEST), "w") as f:
+        json.dump(m, f)
+
+    snap = publish_checkpoint(spark, out)
+    registered = {f["file_path"] for f in plan_files(out)}
+    assert registered
+    assert not any("_bucket=3" in f for f in registered)
+    assert snap["summary"]["added-records"] == str(c["rows_scored"])
+    assert snap["summary"]["rows_scored"] == str(c["rows_scored"])
+
+    m2 = run_checkpointed(df, out, id_col="image_id", n_buckets=4)
+    snap2 = publish_checkpoint(spark, out)
+    assert snap2["summary"]["added-records"] == str(gone["rows"])
+    assert snap2["summary"]["rows_scored"] == "50" == str(m2["counters"]["rows_scored"])
+    registered = {f["file_path"] for f in plan_files(out)}
+    assert registered == set(_glob.glob(os.path.join(out, "_bucket=*", "*.parquet")))
+    assert read_table(spark, out).count() == 50
+
+
 def test_cli_iceberg_end_to_end(spark, tmp_path):
     """--format iceberg: input scan-planned from iceberg metadata (the
     runtime jar is absent, so the python fallback route), output

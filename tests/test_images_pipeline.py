@@ -1,10 +1,14 @@
 """Synthetic corpus, codec, decode pass, phash dedup, image+caption
 pipeline, and checkpoint/resume (FIXTURES.md F1/F6)."""
 
+import glob
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from sparkclean import checkpoint as ckpt
 from sparkclean import synth
 from sparkclean.checkpoint import load_manifest, run_checkpointed
 from sparkclean.images import codec
@@ -225,6 +229,84 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS ckpt_scores")
         spark.sql("DROP TABLE IF EXISTS ckpt_feats")
+
+
+def _ckpt_input(spark):
+    """500 rows over 6 input partitions, half kept, half dropped."""
+    return spark.range(0, 500, numPartitions=6).select(
+        F.col("id").alias("image_id"),
+        (F.col("id") % 2 == 0).alias("keep"),
+        F.when(F.col("id") % 2 == 1, F.lit("low_quality")).alias("drop_reason"),
+    )
+
+
+def _assert_one_file_per_bucket(out_dir, n_buckets):
+    """Every bucket directory of a checkpoint output holds exactly one
+    parquet file; returns the set of file paths."""
+    files = {
+        d: glob.glob(os.path.join(d, "*.parquet"))
+        for d in glob.glob(os.path.join(out_dir, "_bucket=*"))
+    }
+    assert len(files) == n_buckets
+    assert all(len(f) == 1 for f in files.values()), files
+    return {f for fs in files.values() for f in fs}
+
+
+def _without_times(manifest):
+    return {
+        b: {k: v for k, v in rec.items() if k != "completed_at"}
+        for b, rec in manifest["buckets"].items()
+    }
+
+
+def test_checkpoint_writes_one_file_per_bucket(spark, tmp_path):
+    """The write is clustered by bucket: each bucket is ONE parquet file
+    however many input partitions fed it, and no cache is left behind."""
+    out = str(tmp_path / "ckpt")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
+    m = run_checkpointed(_ckpt_input(spark), out, n_buckets=16)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
+    _assert_one_file_per_bucket(out, 16)
+    assert m["counters"] == {
+        "rows_scored": 500,
+        "rows_kept": 250,
+        "dropped_by_rule": {"low_quality": 250},
+    }
+
+
+def test_checkpoint_resume_after_kill_before_manifest_save(spark, tmp_path, monkeypatch):
+    """A run killed between the bucket write and the manifest save leaves
+    files no manifest records.  The rerun must rewrite those buckets in
+    place (dynamic overwrite replaces the stale files, it does not add
+    beside them) and end exactly where a single-shot run does."""
+    df = _ckpt_input(spark)
+    out = str(tmp_path / "killed")
+    save = ckpt._save_manifest
+    calls = []
+
+    def killed_once(output_dir, manifest):
+        calls.append(output_dir)
+        if len(calls) == 1:
+            raise RuntimeError("killed before the manifest save")
+        save(output_dir, manifest)
+
+    monkeypatch.setattr(ckpt, "_save_manifest", killed_once)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_checkpointed(df, out, n_buckets=16)
+    assert load_manifest(out)["buckets"] == {}
+    stale = _assert_one_file_per_bucket(out, 16)
+
+    run_checkpointed(df, out, n_buckets=16)
+    solo = str(tmp_path / "solo")
+    m_solo = run_checkpointed(df, solo, n_buckets=16)
+    saved = load_manifest(out)
+    assert saved["counters"] == m_solo["counters"]
+    assert _without_times(saved) == _without_times(m_solo)
+    assert not stale & _assert_one_file_per_bucket(out, 16)
+
+    a = spark.read.parquet(out).orderBy("image_id").collect()
+    b = spark.read.parquet(solo).orderBy("image_id").collect()
+    assert a == b
 
 
 def test_phash_near_duplicates_on_decoded_corpus(spark, corpus):
