@@ -1155,11 +1155,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     # ---- text operators over documents
+    # the Spark side of the three caption-feature gates runs the shipped
+    # Arrow stage (text.fast); the oracles are the DuckDB SQL twins
+    def _caption_stage(spark, sf):
+        return pl.caption_label_frame(_docs(spark, sf).select("doc_id", "text"), "text")
+
     def text_quality_features(spark, sf):
-        out = t_rules.with_quality_features(
-            _docs(spark, sf).select("doc_id", "text"), "text"
-        )
-        return out.select(
+        return _caption_stage(spark, sf).select(
             "doc_id",
             "n_chars",
             "n_words",
@@ -1172,13 +1174,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def langid_markers(spark, sf):
-        return _docs(spark, sf).select(
-            "doc_id", t_langid.langid_markers_col(F.col("text")).alias("pred_lang")
-        )
+        return _caption_stage(spark, sf).select("doc_id", "pred_lang")
 
     def perplexity(spark, sf):
-        return _docs(spark, sf).select(
-            "doc_id", F.round(t_ppl.ppl_hash_col(F.col("text")), 6).alias("ppl")
+        return _caption_stage(spark, sf).select(
+            "doc_id", F.round("ppl", 6).alias("ppl")
         )
 
     def token_stats(spark, sf):

@@ -272,48 +272,21 @@ def decode_scan(
         raise ValueError(f"no parquet files under {path}")
     arrow_schema = _pq.read_schema(files[0])
     narrow_cols = [n for n in arrow_schema.names if n != "bytes"]
-    spark_types = {}
-    import pyarrow as _pa
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    for f in arrow_schema:
-        if f.name == "bytes":
-            continue
-        t = f.type
-        if _pa.types.is_string(t) or _pa.types.is_large_string(t):
-            s = "string"
-        elif _pa.types.is_int64(t):
-            s = "bigint"
-        elif _pa.types.is_int32(t):
-            s = "int"
-        elif _pa.types.is_float64(t):
-            s = "double"
-        elif _pa.types.is_float32(t):
-            s = "float"
-        elif _pa.types.is_boolean(t):
-            s = "boolean"
-        elif _pa.types.is_binary(t) or _pa.types.is_large_binary(t):
-            s = "binary"
-        elif _pa.types.is_int16(t):
-            s = "smallint"
-        elif _pa.types.is_int8(t):
-            s = "tinyint"
-        elif _pa.types.is_date(t):
-            s = "date"
-        elif _pa.types.is_timestamp(t):
-            s = "timestamp"
-        elif _pa.types.is_large_string(t):
-            s = "string"
-        else:
-            # numpy dtype names like 'bool_'/'object' are NOT Spark DDL —
-            # fail with the column named instead of a ParseException later
+    ddl = []
+    for c in narrow_cols:
+        t = arrow_schema.field(c).type
+        try:
+            ddl.append(f"{c} {from_arrow_type(t).simpleString()}")
+        except PySparkTypeError as e:
+            # name the column instead of failing inside a worker later
             raise ValueError(
-                f"decode_scan cannot map arrow type {t} of column "
-                f"{f.name!r} to a Spark type; drop or cast it first"
-            )
-        spark_types[f.name] = s
-    schema = (
-        ", ".join(f"{c} {spark_types[c]}" for c in narrow_cols) + ", " + STATS_FIELDS
-    )
+                f"decode_scan cannot map arrow type {t} of column {c!r} "
+                f"to a Spark type; drop or cast it first ({e})"
+            ) from e
+    schema = ", ".join(ddl) + ", " + STATS_FIELDS
     if with_caption_features:
         schema += (
             ", n_chars bigint, n_words bigint, digit_ratio double, alpha_ratio double,"

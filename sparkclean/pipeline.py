@@ -7,10 +7,11 @@ write.
 
 This is exactly the 2-pass batched shape of the reference
 (experimental/label_issues_batched.py:43-227 — see SURVEY.md §3.4), with
-Spark aggregations replacing the streaming accumulators.  Everything up
-to the bottom-n selection is a single whole-stage-codegen projection per
-pass; the pseudo-label scorer weights are frozen literals (the "broadcast
-model table" of SURVEY.md §2.12).
+Spark aggregations replacing the streaming accumulators.  Caption
+features, langid, perplexity and the pseudo-label come from one Arrow
+stage (:func:`caption_label_frame`, running text.fast); the pseudo-label
+scorer weights are frozen literals (the "broadcast model table" of
+SURVEY.md §2.12).
 
 ``oracle_sql_for`` emits the DuckDB twin of the whole pipeline, built
 from the same per-stage SQL generators so the two cannot drift.
@@ -18,16 +19,15 @@ from the same per-stage SQL generators so the two cannot drift.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .constants import CONFIDENT_THRESHOLDS_LOWER_BOUND, FLOATING_POINT_COMPARISON
 from .quality.issues import bottom_n_flags
 from .quality.scores import boosted_predicted_label, predicted_label, self_confidence
 from .quality.thresholds import get_confident_thresholds
-from .text.langid import langid_markers_col
-from .text.ppl import ppl_hash_col, ppl_hash_sql
-from .text.rules import quality_features_sql_exprs, with_quality_features
+from .text.ppl import ppl_hash_sql
+from .text.rules import quality_features_sql_exprs
 from .text.scrub import scrub_col, scrub_sql
 
 NUM_CLASSES = 3  # 0=good, 1=low_quality, 2=wrong_language
@@ -45,47 +45,26 @@ MAX_REPETITION_GOOD = 0.5
 MAX_DIGIT_GOOD = 0.3
 
 
-def _features(df: DataFrame, text_col: str) -> DataFrame:
-    from .skew import ensure_parallelism
+def caption_label_frame(df: DataFrame, text_col: str) -> DataFrame:
+    """The caption stage: one mapInPandas stage over ``df`` runs
+    text.fast, appending every caption feature, the pseudo-label and
+    pred_probs to the input columns.  Batch (:func:`caption_scores`),
+    streaming (:mod:`sparkclean.streaming`) and the text gate queries
+    all call it; the DuckDB SQL twins (``quality_features_sql_exprs``,
+    ``langid_markers_query_sql``, ``ppl_hash_sql``, :func:`oracle_sql_for`)
+    are its oracle.  Works on streaming frames too.
 
-    out = with_quality_features(ensure_parallelism(df), text_col)
-    return out.withColumn("pred_lang", langid_markers_col(F.col(text_col))).withColumn(
-        "ppl", ppl_hash_col(F.col(text_col))
-    )
+    Output columns: the input columns, then ``n_chars``, ``n_words``,
+    ``digit_ratio``, ``alpha_ratio``, ``punct_ratio``, ``upper_ratio``,
+    ``repetition_ratio``, ``stopword_ratio``, ``pred_lang``, ``ppl``,
+    ``label`` and ``pred_probs``.  A source column named like one of
+    these outputs is replaced by the computed value, not duplicated.
 
-
-def _logit(w: dict) -> Column:
-    f_len = F.least(F.col("n_words").cast("double"), F.lit(50.0)) / F.lit(50.0)
-    en = F.when(F.col("pred_lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0))
-    lppl = F.log(F.col("ppl")) / F.lit(10.0)
-    return (
-        F.lit(float(w["bias"]))
-        + F.lit(float(w["f_len"])) * f_len
-        + F.lit(float(w["rep"])) * F.col("repetition_ratio")
-        + F.lit(float(w["digit"])) * F.col("digit_ratio")
-        + F.lit(float(w["punct"])) * F.col("punct_ratio")
-        + F.lit(float(w["stop"])) * F.col("stopword_ratio")
-        + F.lit(float(w["en"])) * en
-        + F.lit(float(w["lppl"])) * lppl
-    )
-
-
-def _fast_label_frame(df: DataFrame, text_col: str) -> DataFrame:
-    """Arrow fast-path twin of ``_with_label_and_probs(_features(df, c))``
-    — one mapInPandas stage computes every caption feature, the pseudo-
-    label and pred_probs via text.fast (same formulas, same md5 table,
-    same tie-breaks; parity asserted by tests/test_text_parity and the
-    DuckDB gate incl. the adversarial zoo corpus).  Replaces ~10
-    interpreted Catalyst projections (per-bigram md5, marker-set
-    filters) with one vectorized Python stage — the same dataflow the
-    image pipeline has always used (images.decode.decode_scan
-    with_caption_features=True).
-
-    Null-text parity (pinned against the Catalyst/DuckDB twins):
-    ratios/stopword/repetition coalesce to 0.0, pred_lang='und', ppl is
-    the fallback, n_chars/n_words stay NULL, and the scorer's f_len term
-    is 1.0 (Spark ``least`` SKIPS nulls: least(NULL, 50)/50 = 1) — fed
-    here by patching n_words to 50 for null rows before the scorer.
+    Null text: ratios/stopword/repetition are 0.0, pred_lang is 'und',
+    ppl is the fallback, n_chars/n_words are NULL (as SQL ``length(NULL)``
+    in the twins), and the scorer's f_len term is 1.0 (the twins'
+    ``least(NULL, 50)`` skips the null) — fed here by patching n_words
+    to 50 for null rows before the scorer.
     """
     import os as _os
 
@@ -104,10 +83,8 @@ def _fast_label_frame(df: DataFrame, text_col: str) -> DataFrame:
         "upper_ratio", "repetition_ratio", "stopword_ratio", "pred_lang",
         "ppl", "label", "pred_probs",
     )
-    # a source column colliding with a feature name (e.g. documents'
-    # own n_chars) is replaced by the computed feature — the Catalyst
-    # path appended a duplicate-named column instead, which nothing
-    # downstream could reference anyway
+    # a source column colliding with an output name (e.g. documents'
+    # own n_chars) is replaced by the computed value
     cols = [c for c in src.columns if c not in _out_names]
     base_ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
@@ -163,23 +140,6 @@ def _fast_label_frame(df: DataFrame, text_col: str) -> DataFrame:
     return src.mapInPandas(run, schema)
 
 
-def _with_label_and_probs(df: DataFrame) -> DataFrame:
-    exps = [F.exp(_logit(w)) for w in WEIGHTS]
-    total = exps[0] + exps[1] + exps[2]
-    probs = F.array(*[e / total for e in exps])
-    label = (
-        F.when(F.col("pred_lang") != "en", F.lit(2))
-        .when(
-            (F.col("n_words") < MIN_WORDS_GOOD)
-            | (F.col("repetition_ratio") > MAX_REPETITION_GOOD)
-            | (F.col("digit_ratio") > MAX_DIGIT_GOOD),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-    )
-    return df.withColumn("pred_probs", probs).withColumn("label", label)
-
-
 def caption_scores(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -189,11 +149,11 @@ def caption_scores(
     """Caption quality dataflow; returns the input columns plus label,
     quality_score (unrounded), is_label_issue, keep, scrubbed_text.
 
-    Job structure (the 2-pass batched shape): one projection builds
-    features+probs (cached), pass-1 agg collects K=3 thresholds, pass-2
-    agg counts issues, then the exact bottom-n selection and the scrub
-    projection.  All aggregations are map-side partial; nothing wide
-    shuffles.
+    Job structure (the 2-pass batched shape): the caption stage
+    (:func:`caption_label_frame`) builds features+probs (cached),
+    pass-1 agg collects K=3 thresholds, pass-2 agg counts issues, then
+    the exact bottom-n selection and the scrub projection.  All
+    aggregations are map-side partial; nothing wide shuffles.
 
     Cache ownership: the scored frame stays persisted for the session
     (the returned DataFrame reads it lazily — unpersisting here would
@@ -218,11 +178,7 @@ def caption_scores(
         # (e.g. inside the decode_scan Arrow pass — text.fast)
         feats = df
     else:
-        # one Arrow stage instead of ~10 interpreted Catalyst
-        # projections (text.fast twin — measured 3.7 s -> see
-        # OPTIMIZATION_r06.md; the Catalyst builders remain the oracle-
-        # parity / streaming path in _features/_with_label_and_probs)
-        feats = _fast_label_frame(df, text_col)
+        feats = caption_label_frame(df, text_col)
     feats = feats.persist()
 
     _t0 = _time.time()
@@ -291,8 +247,8 @@ def run_image_caption_quality(
     Plan shape (100 TB design):
       1. ONE scan: the decode mapInPandas emits narrow columns + stats
          together — ``bytes`` dies at the scan, no join needed;
-      2. caption scoring on the narrow projection (codegen projections
-         + two tiny aggs + exact bottom-n);
+      2. caption scoring on the narrow projection (the Arrow caption
+         stage + two tiny aggs + exact bottom-n);
       3. drop_reason taxonomy feeds the lineage counters.
     """
     from .images.decode import decode_and_project, with_image_issues

@@ -1,20 +1,17 @@
 """Parallelism & skew handling (SURVEY.md §2.12).
 
-* :func:`ensure_parallelism` — small local inputs often arrive as one
-  parquet split; fan them out to the session's core count before the
-  CPU-heavy projection stages.  At 100 TB the scan already has thousands
-  of splits and this is a no-op (condition never triggers).
-* :func:`salted_repartition` — break hot keys (hot language, giant
-  phash/caption duplicate clusters) across ``salt_buckets`` shuffle
-  partitions; pair with a two-stage aggregation (partial per salt,
-  final per key).  AQE skew-join splitting is enabled globally in
-  session.py for the join side of the same problem.
+:func:`ensure_parallelism` — small local inputs often arrive as one
+parquet split; fan them out to the session's core count before the
+CPU-heavy projection stages.  At 100 TB the scan already has thousands
+of splits and this is a no-op (condition never triggers).
+
+Hot keys (hot language, giant phash/caption duplicate clusters) are left
+to AQE skew-join splitting, which session.py enables globally.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 _SIZE_UNITS = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -120,28 +117,3 @@ def ensure_parallelism(
         return df.repartition(target * 2)
     return df
 
-
-def salted_repartition(
-    df: DataFrame,
-    key_cols: list[str],
-    salt_buckets: int = 16,
-    salt_col: str = "_salt",
-    id_cols: list[str] | None = None,
-) -> DataFrame:
-    """Repartition by (keys..., salt) so one hot key spreads over
-    ``salt_buckets`` partitions.  Deterministic salt, so the layout is
-    stable across retries.
-
-    ``id_cols`` names the row-IDENTITY columns the salt hashes (default:
-    all columns).  Pass the table's id column whenever hot keys can
-    carry DUPLICATE row content — a phash mega-cluster or boilerplate
-    caption group is exactly m rows with identical values, and a
-    content hash maps them all to ONE salt (no spread at all, found by
-    the round-5 pin test).  Row identity (image_id/doc_id) spreads them
-    uniformly while staying retry-deterministic, which
-    position/rand-based salts are not."""
-    cols = id_cols or df.columns
-    salted = df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(salt_buckets))
-    )
-    return salted.repartition(*[F.col(c) for c in key_cols], F.col(salt_col))

@@ -12,7 +12,7 @@ pass 2 scores each batch against the thresholds seen so far.  Here:
   appends scored output + a metrics row per batch (lineage counters).
 * :func:`score_stream` — stateless scoring stream for the common
   deployment: thresholds fitted offline (pass 1 over the history),
-  streaming pass 2 = pure projection, so the query needs no state store
+  streaming pass 2 = narrow map stages, so the query needs no state store
   and scales with source parallelism.
 
 Windowed per-language drop-rate counters ride on processing time via
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .constants import CONFIDENT_THRESHOLDS_LOWER_BOUND, FLOATING_POINT_COMPARISON
-from .pipeline import NUM_CLASSES, _features, _with_label_and_probs
+from .pipeline import NUM_CLASSES, caption_label_frame
 from .quality.scores import predicted_label, self_confidence
 from .text.scrub import scrub_col
 
@@ -51,10 +51,10 @@ def score_stream(
     text_col: str = "caption",
 ) -> DataFrame:
     """Stateless streaming pass 2: features → pseudo-labels → scores →
-    scrub, with frozen thresholds. Pure projections — no state store,
+    scrub, with frozen thresholds. Narrow stages only — no state store,
     no shuffle; watermark/window counters can be layered by the caller.
     """
-    feats = _with_label_and_probs(_features(stream_df, text_col))
+    feats = caption_label_frame(stream_df, text_col)
     scored = _score_batch(feats, thresholds)
     return scored.withColumn("scrubbed_text", scrub_col(F.col(text_col)))
 
@@ -81,8 +81,13 @@ class StreamingLabelInspector:
 
     def process_batch(self, batch_df: DataFrame, text_col: str = "caption") -> DataFrame:
         """Update thresholds from this batch, then score it with the
-        post-update state (matches LabelInspector's single-pass mode)."""
-        feats = _with_label_and_probs(_features(batch_df, text_col)).persist()
+        post-update state (matches LabelInspector's single-pass mode).
+
+        The returned frame reads a persisted feature cache; it stays
+        pinned until :meth:`release_batch_cache` or the next call, which
+        drops the previous batch's cache first."""
+        self.release_batch_cache()
+        feats = caption_label_frame(batch_df, text_col).persist()
         rows = (
             feats.groupBy(F.col("label").cast("int").alias("_k"))
             .agg(
@@ -112,12 +117,9 @@ class StreamingLabelInspector:
                 "thresholds": self.thresholds(),
             }
         )
-        # NOTE: feats stays persisted — the returned frame reads it
-        # lazily, and an unpersist here made attach()'s parquet write
-        # recompute the whole feature DAG a third time per micro-batch
-        # (round-3 review).  The consumer owns the cache: attach()
-        # unpersists after its write; direct callers unpersist (or
-        # clearCache) once the result is materialized.
+        # feats stays persisted: the returned frame reads it lazily, and
+        # an unpersist here would make attach()'s parquet write recompute
+        # the feature stage.  The inspector owns the one live cache.
         self._last_feats = feats
         return scored
 

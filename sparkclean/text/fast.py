@@ -1,19 +1,24 @@
-"""Arrow-batch caption scorer — the production fast path.
+"""Arrow-batch caption scorer — the production caption stage.
 
-Computes, per Arrow batch inside a pandas/mapInPandas worker, exactly
-the same features / pseudo-label / pred_probs as the Catalyst SQL path
-in text.rules / text.langid / text.ppl / pipeline (and their DuckDB
-twins): identical formulas, identical hashing (md5), identical
-tie-breaks.  Float results agree to the last ulp except for libm
-``exp`` differences (~1e-16 relative), which the 6-dp output rounding
-absorbs; pseudo-labels and keep/drop rules compare quantities far from
-their decision boundaries on the synthetic corpus (margin analysis in
-SURVEY.md §7).
+Computes, per Arrow batch inside a pandas/mapInPandas worker, every
+caption feature (heuristic rules, marker langid, hashed-bigram
+perplexity), the pseudo-label and pred_probs.  It is the only
+implementation: batch and streaming reach it through
+``pipeline.caption_label_frame``, the image scan through
+``images.decode.decode_scan(with_caption_features=True)``.  Its twins
+are the DuckDB SQL oracles (``rules.quality_features_sql_exprs``,
+``langid.langid_markers_query_sql``, ``ppl.ppl_hash_sql``,
+``pipeline.oracle_sql_for``) and the scorer constants in pipeline.py:
+identical formulas, identical hashing (md5), identical tie-breaks.
+Float results agree to the last ulp except for libm ``exp`` differences
+(~1e-16 relative), which the 6-dp output rounding absorbs; pseudo-labels
+and keep/drop rules compare quantities far from their decision
+boundaries on the synthetic corpus (margin analysis in SURVEY.md §7).
 
 This is the dataflow BASELINE.json prescribes — "vectorized
 pandas/Arrow UDFs run fastText language ID, a hashed n-gram KenLM-style
 perplexity scorer" — and it sidesteps the JVM contention of interpreted
-higher-order expressions (measured 0.38 scaling efficiency for the
+higher-order expressions (measured 0.38 scaling efficiency for a
 Catalyst feature stage at 32 threads vs ~0.9 for Python workers).
 """
 
@@ -102,7 +107,7 @@ def caption_features_batch(texts) -> dict[str, np.ndarray]:
     # tokenize through the exact engine twin (shared.words_py): Python
     # str.strip()/str.split() is Unicode-aware and drops the empty
     # leading token Java's split keeps, so it DIVERGES from the
-    # Catalyst/DuckDB paths on tab-led or NBSP text (round-3 review)
+    # DuckDB oracle on tab-led or NBSP text
     from .shared import words_py
 
     stripped = s.str.strip(" ")
@@ -149,7 +154,7 @@ def caption_features_batch(texts) -> dict[str, np.ndarray]:
     )
     out["pred_lang"] = pred.astype(object)
 
-    # hashed-bigram perplexity (exact md5 twin of ppl_hash_col): adjacent
+    # hashed-bigram perplexity (exact md5 twin of ppl_hash_sql): adjacent
     # token pairs of the SAME row, keyed as int pairs; md5 runs only once
     # per unique pair (memoized across batches)
     sum_arr = np.zeros(n)

@@ -1,11 +1,10 @@
 """Language identification.
 
-Two implementations, same API shape:
-
-* :func:`langid_markers_col` — marker-word counting, pure Catalyst SQL
-  (oracle-checkable in DuckDB).  Score per language = #tokens in that
-  language's marker list; argmax with deterministic first-wins tie-break
-  over LANG_ORDER; rows with zero marker hits → 'und'.
+* Marker-word langid: score per language = #tokens in that language's
+  marker list; argmax with deterministic first-wins tie-break over
+  LANG_ORDER; rows with zero marker hits → 'und'.  It ships in text.fast
+  (``caption_features_batch``, the Arrow caption stage);
+  :func:`langid_markers_query_sql` is its DuckDB oracle.
 
 * :class:`FastTextLangId` — fastText-style hashed char-ngram linear
   model (SURVEY.md §2.12): a frozen, seeded (BUCKETS × L) weight table
@@ -18,66 +17,20 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
-from .shared import (
-    LANG_MARKERS,
-    LANG_ORDER,
-    ascii_lower_col,
-    ascii_lower_sql,
-    lit_str_array,
-    sql_str_list,
-    words_sql,
-)
+from .shared import LANG_MARKERS, LANG_ORDER, ascii_lower_sql, sql_str_list, words_sql
 
 # ------------------------------------------------------ marker-word langid
-
-
-def _marker_hits_col(words_lower: Column, lang: str) -> Column:
-    markers = lit_str_array(LANG_MARKERS[lang])
-    return F.size(F.filter(words_lower, lambda t: F.array_contains(markers, t)))
-
-
-def langid_markers_col(text: Column) -> Column:
-    """Predicted language code ('und' if no marker hits)."""
-    words = F.split(ascii_lower_col(F.trim(text)), r"\s+")
-    hits = [_marker_hits_col(words, lang) for lang in LANG_ORDER]
-    best = F.greatest(*hits)
-    pred = F.lit("und")
-    # first language reaching the max wins → iterate reversed so earlier
-    # languages overwrite later ones in the when-chain
-    for lang, h in reversed(list(zip(LANG_ORDER, hits))):
-        pred = F.when((h == best) & (best > 0), F.lit(lang)).otherwise(pred)
-    return pred
-
-
-def langid_markers_sql(text: str) -> str:
-    """DuckDB twin of :func:`langid_markers_col` (inline-expression
-    form; prefer :func:`langid_markers_query_sql` for whole-table
-    oracles — the inline form re-evaluates every hit count O(L²) times
-    per row inside the greatest/CASE chain)."""
-    w = words_sql(ascii_lower_sql(text))
-    hit_exprs = {
-        lang: f"len(list_filter({w}, t -> list_contains({sql_str_list(LANG_MARKERS[lang])}, t)))"
-        for lang in LANG_ORDER
-    }
-    best = "greatest(" + ", ".join(hit_exprs.values()) + ")"
-    chain = "'und'"
-    for lang in reversed(LANG_ORDER):
-        chain = (
-            f"CASE WHEN {hit_exprs[lang]} = {best} AND {best} > 0 "
-            f"THEN '{lang}' ELSE {chain} END"
-        )
-    return chain
 
 
 def langid_hits_cols_sql(text: str) -> str:
     """SELECT-list fragment computing one ``_h_<lang>`` marker-hit count
     per language from ``text`` — stage these ONCE in a MATERIALIZED CTE
-    (DuckDB re-evaluates inline subexpressions per reference, so the
-    single-expression form costs O(L²) list scans per row)."""
+    (DuckDB re-evaluates inline subexpressions per reference, so an
+    inline greatest/CASE chain over the hit expressions would cost O(L²)
+    list scans per row)."""
     w = words_sql(ascii_lower_sql(text))
     return ",\n         ".join(
         f"len(list_filter({w}, t -> list_contains({sql_str_list(LANG_MARKERS[lang])}, t))) AS _h_{lang}"
@@ -103,9 +56,9 @@ def langid_best_from_hits_sql() -> str:
 
 
 def langid_markers_query_sql(table: str, id_col: str, text: str = "text") -> str:
-    """Whole-table DuckDB twin of :func:`langid_markers_col`: hit counts
-    staged once per language, then the same first-wins argmax chain
-    over plain columns."""
+    """Whole-table DuckDB oracle of marker langid: hit counts staged
+    once per language, then the first-wins argmax chain over plain
+    columns."""
     return f"""
 WITH _lh AS MATERIALIZED (
   SELECT {id_col},

@@ -1,12 +1,11 @@
 """KenLM-style n-gram perplexity.
 
-Production/oracle path (:func:`ppl_hash_col` / :func:`ppl_hash_sql`):
-word-bigram log-probabilities drawn from a *deterministic hashed table* —
+Word-bigram log-probabilities come from a *deterministic hashed table* —
 ``logp(bigram) = LOGP_MIN + (hash60(bigram) % RES)/RES * (LOGP_MAX-LOGP_MIN)``
-— so the whole scorer is a native Catalyst expression (JVM md5 + array
-ops, zero Python) and has an exact DuckDB twin.  This is the stand-in for
-a broadcast KenLM table; swap `hash→table lookup` to use real LM weights
-via :class:`NgramTablePpl`.
+— the stand-in for a broadcast KenLM table.  Production computes it in
+text.fast (``caption_features_batch``, the Arrow caption stage);
+:func:`ppl_hash_sql` is its DuckDB oracle.  To use real LM weights, swap
+`hash→table lookup` via :class:`NgramTablePpl`.
 
 ppl = exp(-mean(logp over bigrams)); rows with <2 tokens get ppl of the
 single-token/empty fallback logp.
@@ -18,11 +17,10 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
-from .shared import ascii_lower_col, ascii_lower_py, ascii_lower_sql, hash60_col, hash60_sql, words_col, words_sql
+from .shared import ascii_lower_py, ascii_lower_sql, hash60_sql, words_sql
 
 LOGP_MIN = -8.0
 LOGP_MAX = -0.5
@@ -30,36 +28,8 @@ RES = 4096
 FALLBACK_LOGP = -6.0
 
 
-def _logp_from_hash_col(h: Column) -> Column:
-    frac = (h % F.lit(RES)).cast("double") / F.lit(float(RES))
-    return F.lit(LOGP_MIN) + frac * F.lit(LOGP_MAX - LOGP_MIN)
-
-
-def ppl_hash_col(text: Column) -> Column:
-    """Perplexity from hashed word-bigram log-probs — pure Catalyst.
-
-    Bigrams come from ``zip_with`` of two shifted slices of the token
-    array (NOT element_at inside a transform lambda, which would
-    re-split the text per bigram — O(n²) under interpreted HOFs).
-    """
-    w = words_col(ascii_lower_col(text))
-    n = F.size(w)
-    bigrams = F.zip_with(
-        F.slice(w, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(w, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    sum_logp = F.aggregate(
-        bigrams, F.lit(0.0), lambda acc, g: acc + _logp_from_hash_col(hash60_col(g))
-    )
-    mean_logp = F.when(n >= 2, sum_logp / (n - 1).cast("double")).otherwise(
-        F.lit(FALLBACK_LOGP)
-    )
-    return F.exp(-mean_logp)
-
-
 def ppl_hash_sql(text: str) -> str:
-    """DuckDB twin of :func:`ppl_hash_col`."""
+    """DuckDB oracle of the hashed-bigram perplexity."""
     w = words_sql(ascii_lower_sql(text))
     h = hash60_sql(f"(w[i] || ' ' || w[i+1])")
     logp = f"({LOGP_MIN} + (({h}) % {RES})::DOUBLE / {RES} * {LOGP_MAX - LOGP_MIN})"
@@ -76,7 +46,7 @@ class NgramTablePpl:
 
     The table maps hash60(bigram) % size → logp (float32 numpy array),
     looked up vectorised inside a pandas UDF.  With the deterministic
-    hashed table it reproduces :func:`ppl_hash_col` exactly.
+    hashed table it reproduces :func:`ppl_hash_sql` exactly.
     """
 
     def __init__(self, spark: SparkSession, table: np.ndarray | None = None):

@@ -1,20 +1,23 @@
-"""Heuristic caption-quality rules — pure Catalyst SQL expressions
-(SURVEY.md §2.12 "Heuristic rules"), with DuckDB-SQL twins for the oracle.
+"""Heuristic caption-quality rules (SURVEY.md §2.12 "Heuristic rules").
+
+The caption features ship from text.fast (the Arrow stage); their oracle
+is :func:`quality_features_sql_exprs`, the DuckDB twin.  The few Catalyst
+helpers left here serve other operators: minhash's representative
+quality score (alpha/repetition ratios) and the document report (word
+count).
 
 All ratios are computed on the raw string; token-level rules use
-whitespace tokens.  Everything stays in whole-stage codegen.
+whitespace tokens.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .shared import (
     ENGLISH_STOPWORDS,
-    ascii_lower_col,
     ascii_lower_sql,
-    lit_str_array,
     sql_str_list,
     words_col,
     words_sql,
@@ -35,20 +38,8 @@ def _ratio_sql(text: str, char_class: str) -> str:
     )
 
 
-def digit_ratio_col(text: Column) -> Column:
-    return _ratio_col(text, "0-9")
-
-
 def alpha_ratio_col(text: Column) -> Column:
     return _ratio_col(text, "A-Za-z")
-
-
-def punct_ratio_col(text: Column) -> Column:
-    return _ratio_col(text, r"!-/:-@\[-`{-~")
-
-
-def upper_ratio_col(text: Column) -> Column:
-    return _ratio_col(text, "A-Z")
 
 
 def repetition_ratio_col(text: Column) -> Column:
@@ -60,39 +51,16 @@ def repetition_ratio_col(text: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def stopword_ratio_col(text: Column) -> Column:
-    w = words_col(ascii_lower_col(text))
-    n = F.size(w)
-    sw = lit_str_array(ENGLISH_STOPWORDS)
-    hits = F.size(F.filter(w, lambda t: F.array_contains(sw, t)))
-    return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
 def word_count_col(text: Column) -> Column:
     return F.size(words_col(text))
-
-
-def with_quality_features(df: DataFrame, text_col: str = "caption") -> DataFrame:
-    """Append the full heuristic feature block in one projection."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        F.length(t).alias("n_chars"),
-        word_count_col(t).alias("n_words"),
-        digit_ratio_col(t).alias("digit_ratio"),
-        alpha_ratio_col(t).alias("alpha_ratio"),
-        punct_ratio_col(t).alias("punct_ratio"),
-        upper_ratio_col(t).alias("upper_ratio"),
-        repetition_ratio_col(t).alias("repetition_ratio"),
-        stopword_ratio_col(t).alias("stopword_ratio"),
-    )
 
 
 # ----------------------------------------------------------- oracle SQL
 
 
 def quality_features_sql_exprs(text: str) -> dict[str, str]:
-    """DuckDB expressions mirroring :func:`with_quality_features`."""
+    """DuckDB oracle for the eight heuristic features of
+    ``text.fast.caption_features_batch`` (``n_chars`` … ``stopword_ratio``)."""
     w = words_sql(text)
     wl = words_sql(ascii_lower_sql(text))
     sw = sql_str_list(ENGLISH_STOPWORDS)

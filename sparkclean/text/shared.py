@@ -1,10 +1,13 @@
 """Shared lexicons + dual-dialect (PySpark Column / ANSI-SQL string)
 expression helpers for the text operators.
 
-Every operator in sparkclean.text exposes the same computation twice:
-``*_col(...)`` builds the Catalyst expression used in production, and
-``*_sql(...)`` emits the equivalent DuckDB-runnable SQL used as the
-correctness oracle.  Keeping both in one module prevents drift.
+Catalyst-backed operators in sparkclean.text expose the same
+computation twice: ``*_col(...)`` builds the Catalyst expression used in
+production, and ``*_sql(...)`` emits the equivalent DuckDB-runnable SQL
+used as the correctness oracle.  Keeping both in one module prevents
+drift.  The caption features ship from text.fast instead and keep only
+their ``*_sql`` oracles; ``words_py``/``ascii_lower_py`` are its
+tokenizer twins.
 
 The 60-bit string hash used across langid / perplexity / dedup is
 ``int(md5(s)[:15], 16)`` — md5 is bit-identical in the JVM and DuckDB, and
@@ -132,6 +135,3 @@ def sql_str_list(items: list[str]) -> str:
     inner = ", ".join("'" + i.replace("'", "''") + "'" for i in items)
     return f"[{inner}]"
 
-
-def lit_str_array(items: list[str]) -> Column:
-    return F.array(*[F.lit(i) for i in items])

@@ -142,9 +142,40 @@ def test_decode_scan_matches_dataframe_path(spark, corpus, tmp_path):
         assert ra == rb
 
 
+def test_decode_scan_rejects_unmappable_column_type(spark, tmp_path):
+    """A column with no Spark type (uint64) fails at plan build with a
+    ValueError naming the column and the Arrow conversion error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkclean.images.decode import decode_scan
+
+    path = tmp_path / "uint64_corpus"
+    path.mkdir()
+    tbl = pa.table(
+        {
+            "image_id": pa.array(["a"]),
+            "bytes": pa.array([b""]),
+            "w": pa.array([1], pa.int32()),
+            "h": pa.array([1], pa.int32()),
+            "fmt": pa.array(["png"]),
+            "caption": pa.array(["a caption"]),
+            "counter": pa.array([1], pa.uint64()),
+        }
+    )
+    pq.write_table(tbl, str(path / "part-0.parquet"))
+    with pytest.raises(
+        ValueError,
+        match=r"column 'counter'.*UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION",
+    ):
+        decode_scan(spark, str(path))
+
+
 def test_fast_caption_path_matches_sql_path(spark, corpus, tmp_path):
-    """The Arrow-batch caption scorer (text.fast) must agree with the
-    Catalyst SQL path: identical labels/keep/scrub, scores to 1e-9."""
+    """Caption features fused into the scan (decode_scan
+    with_caption_features=True) must agree with the separate caption
+    stage (pipeline.caption_label_frame): identical labels/keep/scrub,
+    scores to 1e-6."""
     from sparkclean.pipeline import run_image_caption_quality_from_path
 
     path = str(tmp_path / "corpus_fast")

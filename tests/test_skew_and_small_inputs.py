@@ -52,61 +52,3 @@ def test_knn_shapley_tiny_table_uses_max_rank_edge(spark):
     # contributions exist: not every score collapses to the 0.5 baseline
     assert any(abs(v - 0.5) > 1e-9 for v in out.values()), out
 
-
-def test_salted_repartition_spreads_hot_key(spark):
-    """skew.salted_repartition (the north-rule hot-language /
-    phash-mega-cluster mitigation): a 90%-hot key must land in every
-    salt bucket (spread over salt_buckets partitions instead of one),
-    the salt must be deterministic (stable layout across retries), and
-    a two-stage aggregation over the salted frame must equal the
-    unsalted truth."""
-    from pyspark.sql import functions as F
-
-    from sparkclean.skew import salted_repartition
-
-    n = 4000
-    df = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 10 < 9, F.lit("en")).otherwise(F.lit("fr")).alias("lang"),
-        (F.col("id") % 7).alias("v"),
-    )
-    salted = salted_repartition(df, ["lang"], salt_buckets=8, id_cols=["doc_id"])
-    # hot key spreads: the 'en' rows occupy (nearly) all 8 salt values
-    n_salts = salted.where(F.col("lang") == "en").select("_salt").distinct().count()
-    assert n_salts >= 7, n_salts
-    # determinism across two materialisations
-    s1 = salted.groupBy("lang", "_salt").count().orderBy("lang", "_salt").collect()
-    s2 = (
-        salted_repartition(df, ["lang"], salt_buckets=8, id_cols=["doc_id"])
-        .groupBy("lang", "_salt").count().orderBy("lang", "_salt").collect()
-    )
-    # duplicate-content hot group (the phash-mega-cluster shape): a
-    # CONTENT-hashed salt maps identical rows to one salt; the identity
-    # salt must spread them
-    dup = spark.range(800).select(
-        F.col("id").alias("doc_id"), F.lit("en").alias("lang"), F.lit(0).alias("v")
-    )
-    spread = (
-        salted_repartition(dup, ["lang"], salt_buckets=8, id_cols=["doc_id"])
-        .select("_salt").distinct().count()
-    )
-    assert spread == 8, spread
-    assert s1 == s2
-    # two-stage agg (partial per (key, salt), then final per key) ==
-    # unsalted truth
-    partial = salted.groupBy("lang", "_salt").agg(
-        F.sum("v").alias("_s"), F.count(F.lit(1)).alias("_n")
-    )
-    final = {
-        r["lang"]: (r["s"], r["n"])
-        for r in partial.groupBy("lang")
-        .agg(F.sum("_s").alias("s"), F.sum("_n").alias("n"))
-        .collect()
-    }
-    truth = {
-        r["lang"]: (r["s"], r["n"])
-        for r in df.groupBy("lang")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert final == truth

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkclean import synth
-from sparkclean.pipeline import caption_scores
+from sparkclean.pipeline import caption_label_frame, caption_scores
 from sparkclean.quality.thresholds import get_confident_thresholds
 from sparkclean.streaming import StreamingLabelInspector, score_stream
 
@@ -35,16 +35,19 @@ def test_inspector_threshold_batch_invariance(spark, corpus):
     np.testing.assert_allclose(insp1.thresholds(), insp4.thresholds(), rtol=1e-9)
     assert insp4.batches_seen == 4 and insp4.rows_seen == 400
     assert len(insp4.metrics) == 4
+    # ... and equal the batch pipeline's thresholds on the same frame
+    want = get_confident_thresholds(caption_label_frame(full, "caption"), 3)
+    np.testing.assert_allclose(insp1.thresholds(), want, rtol=1e-12)
 
 
 def test_score_stream_available_now(spark, corpus, tmp_path):
     """Real streaming query: parquet source → stateless scoring →
-    memory sink, one availableNow trigger."""
+    memory sink, one availableNow trigger.  Streaming and batch share
+    one caption stage: per image_id, the stream's label, pred_lang,
+    quality_score and scrubbed_text equal the frame caption_scores
+    builds on the same rows."""
     static = spark.read.parquet(corpus)
-    from sparkclean.pipeline import _features, _with_label_and_probs
-
-    feats = _with_label_and_probs(_features(static, "caption"))
-    thresholds = get_confident_thresholds(feats, 3)
+    thresholds = get_confident_thresholds(caption_label_frame(static, "caption"), 3)
 
     stream = spark.readStream.schema(static.schema).parquet(corpus)
     scored = score_stream(stream, thresholds)
@@ -55,22 +58,67 @@ def test_score_stream_available_now(spark, corpus, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM scored_stream")
-    assert out.count() == 400
-    row = out.select("quality_score", "keep", "scrubbed_text").first()
-    assert row["quality_score"] is not None
+    out = spark.sql("SELECT * FROM scored_stream").collect()
+    assert len(out) == 400
 
-    # streaming scores equal the batch pipeline's pre-selection scores
     batch = {
-        r["image_id"]: r["quality_score"]
-        for r in feats.withColumn(
-            "quality_score",
-            F.element_at(F.col("pred_probs"), F.col("label") + 1),
-        ).select("image_id", "quality_score").collect()
+        r["image_id"]: r
+        for r in caption_scores(static, id_col="image_id", text_col="caption")
+        .select("image_id", "label", "pred_lang", "quality_score", "scrubbed_text")
+        .collect()
     }
-    stream_scores = {r["image_id"]: r["quality_score"] for r in out.collect()}
-    for k, v in stream_scores.items():
-        assert abs(batch[k] - v) < 1e-12
+    assert len(batch) == 400
+    for r in out:
+        b = batch[r["image_id"]]
+        assert r["label"] == b["label"]
+        assert r["pred_lang"] == b["pred_lang"]
+        assert abs(r["quality_score"] - b["quality_score"]) < 1e-12
+        assert r["scrubbed_text"] == b["scrubbed_text"]
+
+
+def test_process_batch_releases_previous_cache(spark, corpus):
+    """Each process_batch drops the previous batch's feature cache, so
+    direct callers hold at most one, and release_batch_cache() returns
+    the persisted-RDD count to where it started."""
+    jsc = spark.sparkContext._jsc
+    full = spark.read.parquet(corpus)
+    # earlier tests may hold caches of these very plans, which the
+    # CacheManager would share with (and unpersist alongside) this one
+    spark.catalog.clearCache()
+    before = jsc.getPersistentRDDs().size()
+    insp = StreamingLabelInspector()
+    for i in range(4):
+        part = full.where(F.pmod(F.xxhash64("image_id"), F.lit(4)) == i)
+        insp.process_batch(part)
+        assert jsc.getPersistentRDDs().size() <= before + 1
+    insp.release_batch_cache()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_caption_stage_replaces_colliding_feature_column(spark, corpus, tmp_path):
+    """A source column named like a caption feature (n_chars) is
+    replaced by the computed value, in batch and in streaming."""
+    path = str(tmp_path / "with_n_chars")
+    spark.read.parquet(corpus).withColumn("n_chars", F.lit(-1).cast("bigint")).write.parquet(path)
+    static = spark.read.parquet(path)
+
+    batch = caption_label_frame(static, "caption")
+    assert batch.columns.count("n_chars") == 1
+    assert batch.where(F.col("n_chars") != F.length("caption")).count() == 0
+
+    stream = spark.readStream.schema(static.schema).parquet(path)
+    scored = score_stream(stream, [0.5, 0.5, 0.5])
+    assert scored.columns.count("n_chars") == 1
+    q = (
+        scored.writeStream.format("memory")
+        .queryName("n_chars_collision")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    out = spark.sql("SELECT caption, n_chars FROM n_chars_collision").collect()
+    assert len(out) == 400
+    assert all(r["n_chars"] == len(r["caption"]) for r in out)
 
 
 def test_foreachbatch_end_to_end(spark, corpus, tmp_path):
@@ -88,12 +136,10 @@ def test_foreachbatch_end_to_end(spark, corpus, tmp_path):
 def test_stateful_language_stats(spark, corpus, tmp_path):
     """applyInPandasWithState operator: running per-language stats
     survive across micro-batches and match the batch-oblivious truth."""
-    from sparkclean.pipeline import _features, _with_label_and_probs
     from sparkclean.streaming import score_stream, stateful_language_stats
 
     static = spark.read.parquet(corpus)
-    feats = _with_label_and_probs(_features(static, "caption"))
-    thresholds = get_confident_thresholds(feats, 3)
+    thresholds = get_confident_thresholds(caption_label_frame(static, "caption"), 3)
 
     stream = spark.readStream.schema(static.schema).option(
         "maxFilesPerTrigger", 1

@@ -1,6 +1,8 @@
-"""Cross-engine parity: Spark text operators vs their DuckDB SQL twins,
-run over the driver-provided documents table (sf0.001), plus scrub
-byte-parity against the plain-Python reference (FIXTURES.md F5)."""
+"""Cross-engine parity: text operators vs their DuckDB SQL twins, run
+over the driver-provided documents table (sf0.001) — the caption
+features through the text.fast Arrow kernel, the other operators
+through Spark — plus scrub byte-parity against the plain-Python
+reference (FIXTURES.md F5)."""
 
 import duckdb
 import numpy as np
@@ -9,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkclean.text import langid, ppl, rules, scrub, tokenize
+from sparkclean.text.fast import caption_features_batch
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -27,8 +30,20 @@ def duck():
     return con
 
 
-def compare(spark_df, duck_con, sql, key="doc_id"):
-    a = spark_df.toPandas().sort_values(key).reset_index(drop=True)
+@pytest.fixture(scope="module")
+def fast(docs):
+    """doc_id plus every text.fast caption feature, one kernel batch."""
+    pdf = docs.select("doc_id", "text").toPandas()
+    feats = caption_features_batch(pdf["text"])
+    return pd.DataFrame({"doc_id": pdf["doc_id"], **feats})
+
+
+def compare(got, duck_con, sql, key="doc_id"):
+    """``got`` is a Spark or pandas frame; compared column by column
+    with the DuckDB result of ``sql``."""
+    if not isinstance(got, pd.DataFrame):
+        got = got.toPandas()
+    a = got.sort_values(key).reset_index(drop=True)
     b = duck_con.execute(sql).df().sort_values(key).reset_index(drop=True)
     assert list(a.columns) == list(b.columns)
     for c in a.columns:
@@ -40,29 +55,22 @@ def compare(spark_df, duck_con, sql, key="doc_id"):
             )
 
 
-def test_quality_features_parity(docs, duck):
-    sdf = rules.with_quality_features(docs.select("doc_id", "text"), "text").drop("text")
+def test_quality_features_parity(fast, duck):
     exprs = rules.quality_features_sql_exprs("text")
     sql = "SELECT doc_id, " + ", ".join(
-        f"{e} AS {name}" for name, e in exprs.items() if name != "n_chars"
-    ) + ", length(text) AS n_chars FROM documents"
-    # align column order
-    sdf = sdf.select("doc_id", *[c for c in exprs if c != "n_chars"], "n_chars")
-    compare(sdf, duck, sql)
+        f"{e} AS {name}" for name, e in exprs.items()
+    ) + " FROM documents"
+    compare(fast[["doc_id", *exprs]], duck, sql)
 
 
-def test_langid_markers_parity(docs, duck):
-    sdf = docs.select("doc_id", langid.langid_markers_col(F.col("text")).alias("pred_lang"))
-    sql = f"SELECT doc_id, {langid.langid_markers_sql('text')} AS pred_lang FROM documents"
-    compare(sdf, duck, sql)
+def test_langid_markers_parity(fast, duck):
+    sql = langid.langid_markers_query_sql("documents", "doc_id")
+    compare(fast[["doc_id", "pred_lang"]], duck, sql)
 
 
-def test_ppl_hash_parity(docs, duck):
-    sdf = docs.select(
-        "doc_id", F.round(ppl.ppl_hash_col(F.col("text")), 6).alias("ppl")
-    )
-    sql = f"SELECT doc_id, round({ppl.ppl_hash_sql('text')}, 6) AS ppl FROM documents"
-    compare(sdf, duck, sql)
+def test_ppl_hash_parity(fast, duck):
+    sql = f"SELECT doc_id, {ppl.ppl_hash_sql('text')} AS ppl FROM documents"
+    compare(fast[["doc_id", "ppl"]], duck, sql)
 
 
 def test_token_count_parity(docs, duck):
@@ -147,14 +155,14 @@ def test_fasttext_langid_smoke(spark):
 
 
 def test_ppl_table_udf_matches_sql_path(spark, docs):
+    """NgramTablePpl with the default hashed table reproduces the
+    production perplexity (text.fast, itself pinned to ppl_hash_sql)."""
     model = ppl.NgramTablePpl(spark)
-    sdf = docs.limit(50).select(
-        "doc_id",
-        F.round(ppl.ppl_hash_col(F.col("text")), 8).alias("sql_ppl"),
-        F.round(model.udf()(F.col("text")), 8).alias("udf_ppl"),
-    )
-    pdf = sdf.toPandas()
-    np.testing.assert_allclose(pdf["sql_ppl"], pdf["udf_ppl"], rtol=1e-9)
+    pdf = docs.limit(50).select(
+        "text", model.udf()(F.col("text")).alias("udf_ppl")
+    ).toPandas()
+    want = caption_features_batch(pdf["text"])["ppl"]
+    np.testing.assert_allclose(pdf["udf_ppl"], want, rtol=1e-9)
 
 
 def test_tokenizer_twin_on_adversarial_whitespace(spark, duck):
@@ -188,32 +196,31 @@ def test_tokenizer_twin_on_adversarial_whitespace(spark, duck):
         assert list(dk[i]) == py, (repr(c), dk[i], py)
 
 
-def test_fast_features_match_catalyst_on_adversarial_whitespace(spark):
+def test_fast_features_match_duckdb_on_adversarial_whitespace(duck):
     """The Arrow fast scorer must produce the SAME word-derived features
-    as the Catalyst path on whitespace-adversarial captions (round-3
-    review: str.strip()/str.split() silently diverged)."""
-    from sparkclean.pipeline import _features
-    from sparkclean.text.fast import caption_features_batch
-
+    as the DuckDB twins on whitespace-adversarial captions
+    (str.strip()/str.split() would silently diverge)."""
     cases = [
         "\tthe quick brown fox jumps",
-        "the quick brown fox jumps over",
+        "the\u00a0quick brown fox jumps over",
         "the quick brown fox\t",
         "le chat dort tres bien ici",
-        "x y z w v u",
+        "x\u2003y z w v u",
         "the the the the the",
     ]
-    df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "i: int, text: string")
-    cat = {
-        r["i"]: r
-        for r in _features(df, "text")
-        .select("i", "n_words", "repetition_ratio", "stopword_ratio", "pred_lang", "ppl")
-        .collect()
-    }
+    duck.execute("CREATE OR REPLACE TABLE ws_captions(i INT, text VARCHAR)")
+    duck.executemany("INSERT INTO ws_captions VALUES (?, ?)", list(enumerate(cases)))
+    exprs = rules.quality_features_sql_exprs("text")
+    sql = f"""
+SELECT f.i, n_words, repetition_ratio, stopword_ratio, l.pred_lang, ppl
+FROM (SELECT i, {exprs["n_words"]} AS n_words,
+             {exprs["repetition_ratio"]} AS repetition_ratio,
+             {exprs["stopword_ratio"]} AS stopword_ratio,
+             {ppl.ppl_hash_sql("text")} AS ppl
+      FROM ws_captions) f
+JOIN ({langid.langid_markers_query_sql("ws_captions", "i")}) l ON f.i = l.i"""
     fast = caption_features_batch(pd.Series(cases))
-    for i in range(len(cases)):
-        assert fast["n_words"][i] == cat[i]["n_words"], (i, cases[i])
-        np.testing.assert_allclose(fast["repetition_ratio"][i], cat[i]["repetition_ratio"], rtol=1e-9)
-        np.testing.assert_allclose(fast["stopword_ratio"][i], cat[i]["stopword_ratio"], rtol=1e-9)
-        assert fast["pred_lang"][i] == cat[i]["pred_lang"], (i, cases[i])
-        np.testing.assert_allclose(fast["ppl"][i], cat[i]["ppl"], rtol=1e-9)
+    got = pd.DataFrame({"i": range(len(cases)), **fast})[
+        ["i", "n_words", "repetition_ratio", "stopword_ratio", "pred_lang", "ppl"]
+    ]
+    compare(got, duck, sql, key="i")
