@@ -3,12 +3,14 @@
 * :func:`knn_edges` — THE shared KNN-graph builder (the Spark analog of
   the reference's single knn_graph reused across issue managers,
   internal/neighbor/knn_graph.py:26-205 + datalab/internal/issue_manager/
-  duplicate.py:154-171): banded sign-random-projection candidates via an
-  equi-join on (band, code), exact distances + per-query top-k on the
-  candidate set only, and a bounded brute-force rescue for rows the
-  buckets under-connect.  Every feature-space consumer (OOD distance,
-  near-duplicate manager, KNN-Shapley valuation) builds on this — no
-  cartesian self-joins anywhere.
+  duplicate.py:154-171): banded sign-random-projection buckets, one
+  grouped Arrow kernel per (band, code) bucket that scores the bucket's
+  rows against each other and keeps each row's top-k within the bucket,
+  a qid-partitioned window that merges the per-bucket lists into the
+  exact top-k over all candidates, and a bounded brute-force rescue for
+  rows the buckets under-connect.  Every feature-space consumer (OOD
+  distance, near-duplicate manager, KNN-Shapley valuation) builds on
+  this — no cartesian self-joins anywhere.
 * :func:`cosine_topk` — exact brute-force top-k for a (small, broadcast)
   query set: the correctness baseline, one shuffle-free broadcast join +
   per-query window.
@@ -28,6 +30,8 @@ asserted separately in tests (tests/test_knn_edges.py).
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pandas as pd
@@ -221,7 +225,9 @@ def lsh_topk(
     scored = (
         cand.join(F.broadcast(qvecs), "query_id")
         .join(nvecs, "neighbor_id")
-        .withColumn("cosine", cosine_col(F.col("_qvec"), F.col("_cvec")))
+        .withColumn(
+            "cosine", pair_dist_udf(None, "cosine_sim")(F.col("_qvec"), F.col("_cvec"))
+        )
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -347,8 +353,16 @@ def pair_dist_udf(dim: int, metric: str):
         raise ValueError(f"unknown metric {metric!r}; expected one of {_METRICS}")
     @pandas_udf("double")
     def dist(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
+        # a NULL vector on either side: cosine is DEFINED as 0 (the
+        # coalesce in cosine_col, the NULL list in cosine_sql), so
+        # cosine_sim is 0.0 and cosine distance 1.0; euclidean stays NULL
+        # (NaN leaves the Arrow batch as NULL), as in both twins
+        ok = ~(a.isna() | b.isna()).to_numpy()
+        out = np.full(len(a), {"euclidean": np.nan, "cosine": 1.0, "cosine_sim": 0.0}[metric])
+        if not ok.any():
+            return pd.Series(out)
+        ma = np.stack(a.to_numpy()[ok]).astype(np.float64)
+        mb = np.stack(b.to_numpy()[ok]).astype(np.float64)
         # dim=None → take the width from the batch (same accumulation
         # order either way; a declared dim only adds a build-time check)
         d_end = ma.shape[1] if dim is None else dim
@@ -357,7 +371,8 @@ def pair_dist_udf(dim: int, metric: str):
             for d in range(d_end):
                 t = ma[:, d] - mb[:, d]
                 acc += t * t
-            return pd.Series(np.sqrt(acc))
+            out[ok] = np.sqrt(acc)
+            return pd.Series(out)
         dot = np.zeros(len(ma))
         na = np.zeros(len(ma))
         nb = np.zeros(len(ma))
@@ -367,9 +382,87 @@ def pair_dist_udf(dim: int, metric: str):
             nb += mb[:, d] * mb[:, d]
         denom = np.sqrt(na) * np.sqrt(nb)
         cos = np.divide(dot, denom, out=np.zeros(len(ma)), where=denom > 0)
-        return pd.Series(cos if metric == "cosine_sim" else 1.0 - cos)
+        out[ok] = cos if metric == "cosine_sim" else 1.0 - cos
+        return pd.Series(out)
 
     return dist
+
+
+#: distance cells (query rows x bucket rows) one block of the bucket
+#: kernel holds at once — 2^22 float64 cells is 32 MB; a bucket larger
+#: than 2048 rows is scored in several query blocks
+_BLOCK_CELLS = 1 << 22
+
+#: repo root for the worker-side sys.path bootstrap — knn_edges' grouped
+#: map is cloudpickled by VALUE but calls _bucket_topk from this package,
+#: which workers cannot import when the application runs from another cwd
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _block_dist(q: np.ndarray, m: np.ndarray, dim: int, metric: str) -> np.ndarray:
+    """(len(q), len(m)) distances, accumulated one dimension at a time in
+    exactly :func:`pair_dist_udf`'s order — bit-identical per pair."""
+    if metric == "euclidean":
+        acc = np.zeros((len(q), len(m)))
+        t = np.empty_like(acc)
+        for d in range(dim):
+            np.subtract(q[:, d][:, None], m[:, d][None, :], out=t)
+            np.multiply(t, t, out=t)
+            acc += t
+        return np.sqrt(acc, out=acc)
+    dot = np.zeros((len(q), len(m)))
+    t = np.empty_like(dot)
+    na = np.zeros(len(q))
+    nb = np.zeros(len(m))
+    for d in range(dim):
+        np.multiply(q[:, d][:, None], m[:, d][None, :], out=t)
+        dot += t
+        na += q[:, d] * q[:, d]
+        nb += m[:, d] * m[:, d]
+    denom = np.sqrt(na)[:, None] * np.sqrt(nb)[None, :]
+    cos = np.divide(dot, denom, out=np.zeros_like(dot), where=denom > 0)
+    return cos if metric == "cosine_sim" else 1.0 - cos
+
+
+def _bucket_topk(
+    ids: np.ndarray, m: np.ndarray, codes: np.ndarray, band: int, k: int, dim: int, metric: str
+):
+    """One (band, code) bucket of s rows: each row's top-k neighbours
+    among the bucket rows it shares no earlier band with, as ``(qid,
+    nid, d)`` arrays ordered by (d, nid) per query.
+
+    ``codes`` is the rows' (s, bands) band-code matrix.  A pair sharing
+    several bands is scored only in the bucket of its first shared band,
+    so every candidate pair leaves exactly one bucket and the merge needs
+    no distinct.  Rows are sorted by id and the distance order is a
+    stable argsort, so equal distances go to the lower id — the (d asc,
+    nid asc) order of knn_edges' window.  NaN distances (NULL once they
+    leave the Arrow batch, and Spark sorts NULL first) are ranked first
+    for the same reason.  A row is dropped from its own list by index,
+    never by a sentinel distance.  Query rows are scored in blocks of at
+    most ``_BLOCK_CELLS`` distance cells."""
+    order = np.argsort(ids, kind="stable")
+    ids, m, codes = ids[order], m[order], codes[order]
+    s = len(ids)
+    qs, ns, ds = [], [], []
+    step = max(1, _BLOCK_CELLS // s)
+    for lo in range(0, s, step):
+        hi = min(lo + step, s)
+        dist = _block_dist(m[lo:hi], m, dim, metric)
+        nan = np.isnan(dist)
+        key = np.where(nan, -np.inf, dist) if nan.any() else dist
+        drop = np.arange(lo, hi)[:, None] == np.arange(s)[None, :]
+        for b in range(band):
+            drop |= codes[lo:hi, b][:, None] == codes[:, b][None, :]
+        rank = np.argsort(key, axis=1, kind="stable")
+        keep = ~np.take_along_axis(drop, rank, axis=1)
+        keep &= np.cumsum(keep, axis=1, dtype=np.int32) <= k
+        r, c = np.nonzero(keep)
+        nb = rank[r, c]
+        qs.append(ids[lo + r])
+        ns.append(ids[nb])
+        ds.append(dist[r, nb])
+    return np.concatenate(qs), np.concatenate(ns), np.concatenate(ds)
 
 
 def _candidate_pairs(
@@ -382,7 +475,9 @@ def _candidate_pairs(
     seed: int,
     block_col: str | None = None,
 ) -> DataFrame:
-    """Distinct directed candidate pairs (qid, nid) sharing ≥1 band code.
+    """Distinct directed candidate pairs (qid, nid) sharing ≥1 band code,
+    for :func:`embedding_near_duplicates` (its one caller; knn_edges
+    scores its buckets in place with :func:`_bucket_topk`).
 
     Band rows carry only (id, band, code[, block]) — vectors never ride
     the candidate shuffle; they are re-joined by id afterwards."""
@@ -415,12 +510,26 @@ def knn_edges(
 ) -> DataFrame:
     """Shared bucketed KNN-edge list: (qid, nid, d, rk) with rk 1..k.
 
-    Plan shape: one banded equi-join for candidates (no cartesian), two
-    id-keyed joins to fetch vectors, one (qid)-partitioned window for the
-    top-k.  Rows whose buckets yield < k candidates get a brute-force
-    rescue pass against the full table — the rescue side is broadcast and
-    is a correctness backstop only (if it grows, raise ``bits``, don't
-    rely on it).
+    Plan shape: the band codes are exploded with the vectors riding the
+    band rows (N·bands rows), one grouped Arrow kernel per (band, code)
+    bucket (:func:`_bucket_topk`) scores the bucket's rows against each
+    other, and one qid-partitioned window re-ranks the kernel's output by
+    (d, nid).  No pair-level join, distinct or shuffle.
+
+    Exact over the candidate set: the kernel scores a pair only in the
+    bucket of the first band the two rows share, so a query's candidates
+    are split across its buckets without overlap, and each bucket keeps
+    the query's top-k of its share.  A neighbour in the query's top-k
+    over all candidates, under the total order (d, nid), is in the top-k
+    of its own share, so the window sees it; a query with fewer than k
+    candidates gets all of them.  Each bucket's query rows are scored in
+    blocks of at most ``_BLOCK_CELLS`` distance cells, so a skewed bucket
+    costs time, not memory.
+
+    Rows whose buckets yield < k candidates get a brute-force rescue pass
+    against the full table — the rescue side is broadcast and is a
+    correctness backstop only (if it grows, raise ``bits``, don't rely
+    on it).
     """
     if dim is None:
         row = df.select(F.size(F.col(vec_col))).first()
@@ -434,12 +543,7 @@ def knn_edges(
 
     dist_udf = pair_dist_udf(dim, metric)
 
-    def rank_topk(pairs: DataFrame) -> DataFrame:
-        scored = (
-            pairs.join(vecs.select(F.col("_id").alias("qid"), F.col("_v").alias("_qv")), "qid")
-            .join(vecs.select(F.col("_id").alias("nid"), F.col("_v").alias("_nv")), "nid")
-            .withColumn("d", dist_udf(F.col("_qv"), F.col("_nv")))
-        )
+    def rank_topk(scored: DataFrame) -> DataFrame:
         w = Window.partitionBy("qid").orderBy(F.col("d").asc(), F.col("nid").asc())
         return (
             scored.withColumn("rk", F.row_number().over(w))
@@ -447,10 +551,28 @@ def knn_edges(
             .select("qid", "nid", "d", "rk")
         )
 
+    _pkg_root = _PKG_ROOT
+
+    def bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        import sys as _sys
+
+        import numpy as _np
+        import pandas as _pd
+
+        if _pkg_root not in _sys.path:
+            _sys.path.insert(0, _pkg_root)
+        from sparkclean.sim.knn import _bucket_topk
+
+        m = _np.stack(pdf["_v"].to_numpy()).astype(_np.float64)
+        codes = _np.stack(pdf["_codes"].to_numpy())
+        band = int(pdf["_band"].iloc[0])
+        q, n, d = _bucket_topk(pdf["_id"].to_numpy(), m, codes, band, k, dim, metric)
+        return _pd.DataFrame({"qid": q, "nid": n, "d": d})
+
     # Rank the LSH candidates first and PERSIST the (≤ N·k rows) result:
-    # the expensive banded join runs exactly once, and the rescue decision
-    # reads only the small edge list.  "ranked count < k" ⟺ "candidate
-    # count < k" since ranked count = min(cand count, k), so applying the
+    # the bucket kernel runs exactly once, and the rescue decision reads
+    # only the small edge list.  "ranked count < k" ⟺ "candidate count
+    # < k" since ranked count = min(cand count, k), so applying the
     # rescue post-rank is equivalent to unioning candidates pre-rank (for
     # a rescued row the rescue set IS the complete pair set) — the DuckDB
     # twin keeps the pre-rank-union formulation, which yields the same
@@ -464,8 +586,19 @@ def knn_edges(
     # list to a table instead of caching.
     from pyspark import StorageLevel
 
-    cand = _candidate_pairs(df, id_col, vec_col, dim, bands, bits, seed)
-    ranked = rank_topk(cand).persist(StorageLevel.MEMORY_AND_DISK)
+    id_type = df.schema[id_col].dataType.simpleString()
+    codes = band_codes_udf(dim, bands, bits, seed)(F.col("_v"))
+    local = (
+        vecs.select("_id", "_v", codes.alias("_codes"))
+        # _outer: the codes array always has `bands` entries, so the rows
+        # are the same, and no size(_codes) > 0 filter is inferred — that
+        # filter would be pushed below the projection and run the band
+        # kernel a second time
+        .select("*", F.posexplode_outer("_codes").alias("_band", "_code"))
+        .groupBy("_band", "_code")
+        .applyInPandas(bucket_topk, f"qid {id_type}, nid {id_type}, d double")
+    )
+    ranked = rank_topk(local).persist(StorageLevel.MEMORY_AND_DISK)
 
     have = ranked.groupBy("qid").agg(F.count(F.lit(1)).alias("_c"))
     needy = (
@@ -500,8 +633,13 @@ def knn_edges(
     rescue_pairs = F.broadcast(needy).join(
         vecs.select(F.col("_id").alias("nid")), F.col("qid") != F.col("nid")
     ).select("qid", "nid")
+    rescued = (
+        rescue_pairs.join(vecs.select(F.col("_id").alias("qid"), F.col("_v").alias("_qv")), "qid")
+        .join(vecs.select(F.col("_id").alias("nid"), F.col("_v").alias("_nv")), "nid")
+        .withColumn("d", dist_udf(F.col("_qv"), F.col("_nv")))
+    )
     kept = ranked.join(F.broadcast(needy), "qid", "left_anti")
-    return kept.unionByName(rank_topk(rescue_pairs))
+    return kept.unionByName(rank_topk(rescued))
 
 
 def knn_edges_cte_sql(

@@ -12,7 +12,11 @@ Three contracts:
    not asserted.)
 3. Plan shape — no CartesianProduct anywhere in the physical plans of
    knn_edges or its four consumers; the only non-equi join allowed is
-   the broadcast rescue backstop.
+   the broadcast rescue backstop.  Without a rescue, knn_edges is one
+   grouped bucket kernel and no join at all.
+4. Exactness — knn_edges equals its DuckDB twin (knn_edges_cte_sql) row
+   for row, ties and the rescue branch included, and the bucket kernel's
+   query blocking does not change its output.
 """
 
 import numpy as np
@@ -169,12 +173,20 @@ def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _final_plan(plan: str) -> str:
+    # an executed AQE plan prints its final plan, then the initial one
+    return plan.split("== Initial Plan ==")[0]
+
+
 def test_no_cartesian_in_consumer_plans(clustered, spark):
     from sparkclean.quality.datalab import near_duplicate_issues
     from sparkclean.quality.valuation import knn_shapley_scores
+    from sparkclean.sim import knn
 
+    edges_plan = _physical_plan(knn_edges(clustered, k=K, dim=DIM))
+    assert knn.LAST_RESCUE_COUNT == 0, "fixture must not engage the rescue"
     plans = {
-        "knn_edges": _physical_plan(knn_edges(clustered, k=K, dim=DIM)),
+        "knn_edges": edges_plan,
         "near_duplicate_issues": _physical_plan(near_duplicate_issues(clustered)),
         "knn_shapley": _physical_plan(knn_shapley_scores(clustered)),
         "embedding_near_duplicates": _physical_plan(
@@ -192,6 +204,11 @@ def test_no_cartesian_in_consumer_plans(clustered, spark):
         )
     # the builder itself contains exactly the one bounded rescue BNLJ
     assert plans["knn_edges"].count("BroadcastNestedLoopJoin") <= 1
+    # with an empty rescue set the builder is one grouped bucket kernel
+    # and no join: vectors ride the band rows, nothing is joined back
+    final = _final_plan(edges_plan)
+    assert final.count("FlatMapGroupsInPandas") == 1, final
+    assert "BroadcastHashJoin" not in final and "SortMergeJoin" not in final, final
 
 
 def test_lsh_topk_external_query_vectors(spark):
@@ -255,3 +272,92 @@ def test_cosine_zero_norm_is_zero_in_all_three_routes(spark):
     con.executemany("INSERT INTO t VALUES (?,?,?)", rows)
     want = dict(con.sql(f"SELECT i, {cosine_sql('a','b')} FROM t").fetchall())
     assert got == want
+
+
+def test_cosine_topk_null_embedding_is_zero(spark):
+    """A NULL embedding scores cosine 0.0 against everything, as
+    cosine_col and cosine_sql define it — it used to crash the whole
+    query in the Arrow kernel's np.stack."""
+    from sparkclean.sim.knn import cosine_col, cosine_topk
+
+    rng = np.random.RandomState(23)
+    rows = [(i, [float(x) for x in rng.randn(4)]) for i in range(5)] + [(5, None)]
+    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
+    got = {
+        (r["query_id"], r["neighbor_id"]): r["cosine"]
+        for r in cosine_topk(df, df, k=5).collect()
+    }
+    a = df.select(F.col("vec_id").alias("q"), F.col("embedding").alias("_a"))
+    b = df.select(F.col("vec_id").alias("n"), F.col("embedding").alias("_b"))
+    want = {
+        (r["q"], r["n"]): r["c"]
+        for r in a.join(b, F.col("q") != F.col("n"))
+        .select("q", "n", F.round(cosine_col(F.col("_a"), F.col("_b")), 6).alias("c"))
+        .collect()
+    }
+    assert len(got) == 30 and got == want
+    assert all(got[(5, n)] == 0.0 and got[(n, 5)] == 0.0 for n in range(5))
+
+
+def _ties_rows():
+    """24 base vectors x 4 exact copies under shuffled ids: every row has
+    three neighbours at d == 0, and equal distances must break by nid."""
+    rng = np.random.RandomState(31)
+    base = rng.randn(24, 8)
+    ids = rng.permutation(96)
+    return [(int(ids[i]), [float(x) for x in base[i % 24]]) for i in range(96)]
+
+
+def _sparse_rows():
+    """12 isotropic rows: too few to share k band codes, so the rescue
+    backstop must engage."""
+    rng = np.random.RandomState(37)
+    return [(i, [float(x) for x in rng.randn(8)]) for i in range(12)]
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "cosine"])
+@pytest.mark.parametrize("fixture", ["ties", "rescue"])
+def test_knn_edges_equals_duckdb_twin(spark, fixture, metric):
+    import duckdb
+
+    from sparkclean.sim import knn
+
+    rows = _ties_rows() if fixture == "ties" else _sparse_rows()
+    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
+    got = sorted(tuple(r) for r in knn_edges(df, k=5, metric=metric, dim=8).collect())
+    if fixture == "rescue":
+        assert knn.LAST_RESCUE_COUNT > 0
+    else:
+        assert any(a[0] == b[0] and a[2] == b[2] for a, b in zip(got, got[1:]))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    cte = knn.knn_edges_cte_sql("t", k=5, metric=metric, dim=8)
+    want = sorted(con.sql(f"WITH {cte.lstrip()} SELECT qid, nid, d, rk FROM knn").fetchall())
+    assert got == want
+
+
+def test_bucket_kernel_blocks_equal_one_block(monkeypatch):
+    """A bucket larger than the block bound is scored in several query
+    blocks; the result equals the same rows scored in one block."""
+    from sparkclean.sim import knn
+
+    rng = np.random.RandomState(41)
+    s = knn._BLOCK_CELLS // 2048 + 52  # > 2048 rows: more than one block
+    m = np.round(rng.randn(s, 4), 1)  # coarse values: many distance ties
+    ids = rng.permutation(s).astype(np.int64)
+    # band 2 of 3: a pair sharing band 0 or 1 belongs to that band's bucket
+    codes = rng.randint(0, 3, (s, 3))
+    for metric, band in (("euclidean", 0), ("cosine", 0), ("euclidean", 2)):
+        blocked = knn._bucket_topk(ids, m, codes, band, 10, 4, metric)
+        with monkeypatch.context() as mp:
+            mp.setattr(knn, "_BLOCK_CELLS", s * s)
+            whole = knn._bucket_topk(ids, m, codes, band, 10, 4, metric)
+        if band == 0:
+            assert len(blocked[0]) == s * 10
+        else:
+            pos = np.argsort(ids)  # row of each id (ids are 0..s-1)
+            q, n = codes[pos[blocked[0]]], codes[pos[blocked[1]]]
+            assert not (q[:, :2] == n[:, :2]).any()
+        for x, y in zip(blocked, whole):
+            np.testing.assert_array_equal(x, y)
