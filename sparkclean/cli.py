@@ -5,14 +5,19 @@ Usage (cluster):
         --input /data/images_table --output /data/scored \
         --buckets 256
 
-Reads the image+caption table (``--format iceberg``: via the
-iceberg-spark runtime jar when present, else the pure-python metadata
-reader in sparkclean.iceberg; parquet otherwise), runs the fused
-keep/drop + scrub pipeline, writes bucket-partitioned output (one
-parquet file per bucket) with the checkpoint manifest + lineage
-counters beside it, and prints the counter summary.  Re-running with
-the same ``--output`` resumes from the manifest (completed buckets are
-skipped).  With ``--format iceberg`` each run additionally commits the
+Reads the image+caption table and runs the fused keep/drop + scrub
+pipeline.  The route follows from the input: ``--format iceberg`` reads
+through the iceberg-spark runtime jar when present, else the
+pure-python metadata reader in sparkclean.iceberg; a parquet ``--input``
+with ``*.parquet`` files directly under it goes through the
+python-native scan (``images.decode.decode_scan``, bytes never cross the
+JVM boundary); any other parquet input (a ``key=value/`` partitioned
+layout, a path the driver cannot list) goes through ``spark.read``.  Both
+parquet routes return the same rows.  It writes bucket-partitioned
+output (one parquet file per bucket) with the checkpoint manifest +
+lineage counters beside it, and prints the counter summary.  Re-running
+with the same ``--output`` resumes from the manifest (completed buckets
+are skipped).  With ``--format iceberg`` each run additionally commits the
 newly completed buckets as an Iceberg snapshot on the output, counters
 in the snapshot summary.
 """
@@ -35,17 +40,11 @@ def main(argv: list[str] | None = None) -> None:
     )
     p.add_argument("--id-col", default="image_id")
     p.add_argument("--text-col", default="caption")
-    p.add_argument(
-        "--fast-scan", action=argparse.BooleanOptionalAction, default=True,
-        help="python-native parquet scan (bytes never cross the JVM "
-        "boundary); --no-fast-scan forces the JVM reader, e.g. for "
-        "partitioned directory layouts or object-store paths the "
-        "worker-local glob cannot reach",
-    )
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
     from .checkpoint import run_checkpointed
+    from .images.decode import parquet_files
     from .pipeline import run_image_caption_quality, run_image_caption_quality_from_path
     from .session import get_spark
 
@@ -67,11 +66,12 @@ def main(argv: list[str] | None = None) -> None:
 
             df = read_table(spark, args.input)
         scored = run_image_caption_quality(df, id_col=args.id_col, text_col=args.text_col)
-    elif args.fast_scan:
+    elif parquet_files(args.input):
         scored = run_image_caption_quality_from_path(
             spark, args.input, id_col=args.id_col, text_col=args.text_col
         )
     else:
+        # partitioned layout or a path the driver cannot list
         df = spark.read.format(args.format).load(args.input)
         scored = run_image_caption_quality(df, id_col=args.id_col, text_col=args.text_col)
 

@@ -14,9 +14,11 @@ validation gates from BASELINE.json input_hint:
                         lossless path)
 
 Design: ``bytes`` is the widest column in the table, so this pass runs
-FIRST on the raw scan; :func:`decode_and_project` emits the narrow
-columns + stats in ONE mapInPandas, so the table is scanned once and
-the binary payload never crosses a shuffle (SURVEY.md §7 risk list).
+FIRST on the raw scan and emits the narrow columns + stats in ONE
+mapInPandas, so the table is scanned once and the binary payload never
+crosses a shuffle (SURVEY.md §7 risk list): :func:`decode_and_project`
+over any DataFrame, or :func:`decode_scan` over parquet files read by
+pyarrow in the workers, optionally with the caption stage in the pass.
 """
 
 from __future__ import annotations
@@ -35,7 +37,6 @@ STATS_FIELDS = (
     "phash_recomputed long, brightness double, pixel_std double, "
     "aspect_ratio double, is_grayscale boolean, blur_score double"
 )
-STATS_SCHEMA = "image_id string, " + STATS_FIELDS
 
 DARK_THRESHOLD = 50.0
 LIGHT_THRESHOLD = 205.0
@@ -205,27 +206,8 @@ _PKG_ROOT = __import__("os").path.dirname(
 )
 
 
-def decode_stats(df: DataFrame) -> DataFrame:
-    """Per-image stats only (image_id + stats); join back on image_id."""
-    _pkg_root = _PKG_ROOT
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys as _sys
-
-        if _pkg_root not in _sys.path:
-            _sys.path.insert(0, _pkg_root)
-        from sparkclean.images.decode import _stats_for_batch
-
-        for pdf in batches:
-            out = {"image_id": pdf["image_id"]}
-            out.update(_stats_for_batch(pdf))
-            yield pd.DataFrame(out)
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, STATS_SCHEMA)
-
-
 def decode_and_project(df: DataFrame) -> DataFrame:
-    """One-scan variant: narrow columns + stats out of a single
+    """Narrow columns + stats of any DataFrame out of a single
     mapInPandas — the table is read once, ``bytes`` dies at the scan,
     and no join/shuffle is needed downstream.  This is the 100 TB shape.
     """
@@ -249,8 +231,20 @@ def decode_and_project(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema)
 
 
+def parquet_files(path: str) -> list[str]:
+    """The ``*.parquet`` files directly under ``path``, sorted; empty for
+    a ``key=value/`` partitioned layout or a path the driver can't list."""
+    import glob as _glob
+
+    return sorted(_glob.glob(f"{path.rstrip('/')}/*.parquet"))
+
+
 def decode_scan(
-    spark, path: str, files_per_task: int = 1, with_caption_features: bool = False
+    spark,
+    path: str,
+    files_per_task: int = 1,
+    with_caption_features: bool = False,
+    text_col: str = "caption",
 ) -> DataFrame:
     """Python-native scan variant: workers read the parquet files
     directly with pyarrow, so the multi-KB ``bytes`` column never
@@ -260,18 +254,25 @@ def decode_scan(
 
     Spark still owns the file-split assignment, retries, and everything
     downstream; this is the standard vectorized-python-reader shape for
-    binary-heavy tables.  Emits the same schema as
-    :func:`decode_and_project`.
+    binary-heavy tables.  Reads the files :func:`parquet_files` lists and
+    emits the same schema as :func:`decode_and_project`;
+    ``with_caption_features=True`` appends what
+    ``pipeline.caption_label_frame`` appends, from the same batch
+    function run on ``text_col`` in this pass (ValueError at plan build
+    if the files lack it).
     """
-    import glob as _glob
-
     import pyarrow.parquet as _pq
 
-    files = sorted(_glob.glob(f"{path.rstrip('/')}/*.parquet"))
+    files = parquet_files(path)
     if not files:
         raise ValueError(f"no parquet files under {path}")
     arrow_schema = _pq.read_schema(files[0])
-    narrow_cols = [n for n in arrow_schema.names if n != "bytes"]
+    from ..text.fast import CAPTION_FIELDS, CAPTION_NAMES
+
+    if with_caption_features and text_col not in arrow_schema.names:
+        raise ValueError(f"decode_scan: no text column {text_col!r} in {files[0]}")
+    replaced = CAPTION_NAMES if with_caption_features else ()
+    narrow_cols = [n for n in arrow_schema.names if n != "bytes" and n not in replaced]
     from pyspark.errors import PySparkTypeError
     from pyspark.sql.pandas.types import from_arrow_type
 
@@ -286,14 +287,7 @@ def decode_scan(
                 f"decode_scan cannot map arrow type {t} of column {c!r} "
                 f"to a Spark type; drop or cast it first ({e})"
             ) from e
-    schema = ", ".join(ddl) + ", " + STATS_FIELDS
-    if with_caption_features:
-        schema += (
-            ", n_chars bigint, n_words bigint, digit_ratio double, alpha_ratio double,"
-            " punct_ratio double, upper_ratio double, repetition_ratio double,"
-            " stopword_ratio double, pred_lang string, ppl double,"
-            " label int, pred_probs array<double>"
-        )
+    schema = ", ".join(ddl + [STATS_FIELDS] + ([CAPTION_FIELDS] if with_caption_features else []))
 
     # Task granularity: one task per tiny file starves on per-task fixed
     # costs (a 60k-image corpus in 256 x 234-row files spent 2.4x longer
@@ -348,16 +342,9 @@ def decode_scan(
                 )
                 out.update(stats)
                 if with_caption_features:
-                    from sparkclean.text.fast import (
-                        caption_features_batch,
-                        label_and_probs_batch,
-                    )
+                    from sparkclean.text.fast import caption_label_batch
 
-                    feats = caption_features_batch(out["caption"].tolist())
-                    label, probs = label_and_probs_batch(feats)
-                    out.update(feats)
-                    out["label"] = label
-                    out["pred_probs"] = list(probs)
+                    out.update(caption_label_batch(out[text_col]))
                 yield pd.DataFrame(out)
 
     return fdf.mapInPandas(run, schema)

@@ -51,7 +51,7 @@ def resize_images(
     """Decode → nearest-neighbour resize → re-encode, one mapInPandas
     pass.  Real pixels via our own codec; the resize kernel is exact and
     deterministic.  Null or undecodable payloads are SKIPPED (dropped
-    from the output, like decode_stats leaves their stats null) instead
+    from the output; decode_and_project leaves their stats null) instead
     of failing the task — a single corrupt row must not kill the job.
     ``image_codec`` other than "synthetic" raises NotImplementedError
     (the external-codec contract of the module docstring)."""

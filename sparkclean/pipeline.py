@@ -9,7 +9,8 @@ This is exactly the 2-pass batched shape of the reference
 (experimental/label_issues_batched.py:43-227 — see SURVEY.md §3.4), with
 Spark aggregations replacing the streaming accumulators.  Caption
 features, langid, perplexity and the pseudo-label come from one Arrow
-stage (:func:`caption_label_frame`, running text.fast); the pseudo-label
+batch function (``text.fast.caption_label_batch``, run by
+:func:`caption_label_frame` or inside the image scan); the pseudo-label
 scorer weights are frozen literals (the "broadcast model table" of
 SURVEY.md §2.12).
 
@@ -47,28 +48,25 @@ MAX_DIGIT_GOOD = 0.3
 
 def caption_label_frame(df: DataFrame, text_col: str) -> DataFrame:
     """The caption stage: one mapInPandas stage over ``df`` runs
-    text.fast, appending every caption feature, the pseudo-label and
-    pred_probs to the input columns.  Batch (:func:`caption_scores`),
+    ``text.fast.caption_label_batch``, appending every caption feature,
+    the pseudo-label and pred_probs to the input columns.  Batch
+    (:func:`run_caption_quality`, :func:`run_image_caption_quality`),
     streaming (:mod:`sparkclean.streaming`) and the text gate queries
-    all call it; the DuckDB SQL twins (``quality_features_sql_exprs``,
+    all call it, and the python-native image scan runs the same batch
+    function; the DuckDB SQL twins (``quality_features_sql_exprs``,
     ``langid_markers_query_sql``, ``ppl_hash_sql``, :func:`oracle_sql_for`)
     are its oracle.  Works on streaming frames too.
 
-    Output columns: the input columns, then ``n_chars``, ``n_words``,
-    ``digit_ratio``, ``alpha_ratio``, ``punct_ratio``, ``upper_ratio``,
-    ``repetition_ratio``, ``stopword_ratio``, ``pred_lang``, ``ppl``,
-    ``label`` and ``pred_probs``.  A source column named like one of
-    these outputs is replaced by the computed value, not duplicated.
-
-    Null text: ratios/stopword/repetition are 0.0, pred_lang is 'und',
-    ppl is the fallback, n_chars/n_words are NULL (as SQL ``length(NULL)``
-    in the twins), and the scorer's f_len term is 1.0 (the twins'
-    ``least(NULL, 50)`` skips the null) — fed here by patching n_words
-    to 50 for null rows before the scorer.
+    Output columns: the input columns, then ``text.fast.CAPTION_FIELDS``
+    (``n_chars`` … ``stopword_ratio``, ``pred_lang``, ``ppl``, ``label``,
+    ``pred_probs``).  A source column named like one of these outputs is
+    replaced by the computed value, not duplicated.  Null-text semantics
+    are those of ``caption_label_batch``.
     """
     import os as _os
 
     from .skew import ensure_parallelism
+    from .text.fast import CAPTION_FIELDS, CAPTION_NAMES
 
     # worker-side import root: the nested `run` below is cloudpickled by
     # VALUE, but the text.fast kernels it calls live in this package —
@@ -78,84 +76,52 @@ def caption_label_frame(df: DataFrame, text_col: str) -> DataFrame:
     _pkg_root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
 
     src = ensure_parallelism(df)
-    _out_names = (
-        "n_chars", "n_words", "digit_ratio", "alpha_ratio", "punct_ratio",
-        "upper_ratio", "repetition_ratio", "stopword_ratio", "pred_lang",
-        "ppl", "label", "pred_probs",
-    )
     # a source column colliding with an output name (e.g. documents'
     # own n_chars) is replaced by the computed value
-    cols = [c for c in src.columns if c not in _out_names]
-    base_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema
-        if f.name not in _out_names
-    )
-    schema = base_ddl + (
-        ", n_chars bigint, n_words bigint, digit_ratio double, alpha_ratio double,"
-        " punct_ratio double, upper_ratio double, repetition_ratio double,"
-        " stopword_ratio double, pred_lang string, ppl double,"
-        " label int, pred_probs array<double>"
+    cols = [c for c in src.columns if c not in CAPTION_NAMES]
+    schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}" for f in src.schema if f.name in cols]
+        + [CAPTION_FIELDS]
     )
 
     def run(batches):
         import sys
 
-        import numpy as np
         import pandas as pd
 
         if _pkg_root not in sys.path:
             sys.path.insert(0, _pkg_root)
-        from sparkclean.text.fast import (
-            caption_features_batch,
-            label_and_probs_batch,
-        )
+        from sparkclean.text.fast import caption_label_batch
 
         for pdf in batches:
             out = {c: pdf[c] for c in cols}
-            texts = pdf[text_col]
-            feats = caption_features_batch(texts.tolist())
-            null_mask = texts.isna().to_numpy()
-            if null_mask.any():
-                # f_len = 1.0 for null text (least-skips-null semantics)
-                patched = dict(feats)
-                nw = feats["n_words"].copy()
-                nw[null_mask] = 50
-                patched["n_words"] = nw
-                label, probs = label_and_probs_batch(patched)
-                # n_chars / n_words are NULL for null text (length(NULL))
-                feats["n_chars"] = pd.arrays.IntegerArray(
-                    feats["n_chars"].astype(np.int64), null_mask.copy()
-                )
-                feats["n_words"] = pd.arrays.IntegerArray(
-                    feats["n_words"].astype(np.int64), null_mask.copy()
-                )
-            else:
-                label, probs = label_and_probs_batch(feats)
-            out.update(feats)
-            out["label"] = label
-            out["pred_probs"] = list(probs)
+            out.update(caption_label_batch(pdf[text_col]))
             yield pd.DataFrame(out)
 
     return src.mapInPandas(run, schema)
 
 
 def caption_scores(
-    df: DataFrame,
+    labelled: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     stage_times: dict | None = None,
 ) -> DataFrame:
-    """Caption quality dataflow; returns the input columns plus label,
-    quality_score (unrounded), is_label_issue, keep, scrubbed_text.
+    """Caption quality dataflow over a LABELLED frame — one that already
+    carries ``label`` and ``pred_probs``, i.e. the output of
+    :func:`caption_label_frame` or of
+    ``decode_scan(with_caption_features=True)``.  Returns its columns
+    plus quality_score (unrounded), is_label_issue, keep, scrubbed_text.
 
-    Job structure (the 2-pass batched shape): the caption stage
-    (:func:`caption_label_frame`) builds features+probs (cached),
-    pass-1 agg collects K=3 thresholds, pass-2 agg counts issues, then
-    the exact bottom-n selection and the scrub projection.  All
-    aggregations are map-side partial; nothing wide shuffles.
+    Job structure (the 2-pass batched shape): ``labelled`` is cached,
+    pass-1 agg collects K=3 thresholds (paying the upstream scan and
+    caption stage into the persist), pass-2 agg counts issues, then the
+    exact bottom-n selection and the scrub projection.  All aggregations
+    are map-side partial; nothing wide shuffles.  Project ``labelled``
+    down to the columns the caller still needs before calling: every
+    column is cached.
 
-    Cache ownership: the scored frame stays persisted for the session
+    Cache ownership: the labelled frame stays persisted for the session
     (the returned DataFrame reads it lazily — unpersisting here would
     recompute features for the caller's action).  Batch drivers
     (bench.py, tools/check_correctness.py) clearCache() between queries;
@@ -173,13 +139,7 @@ def caption_scores(
     """
     import time as _time
 
-    if "label" in df.columns and "pred_probs" in df.columns:
-        # fast path: features + pseudo-labels already computed upstream
-        # (e.g. inside the decode_scan Arrow pass — text.fast)
-        feats = df
-    else:
-        feats = caption_label_frame(df, text_col)
-    feats = feats.persist()
+    feats = labelled.persist()
 
     _t0 = _time.time()
     thresholds = get_confident_thresholds(feats, NUM_CLASSES)
@@ -227,7 +187,7 @@ def run_caption_quality(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Caption-only pipeline with the stable public output schema."""
-    out = caption_scores(df, id_col, text_col)
+    out = caption_scores(caption_label_frame(df, text_col), id_col, text_col)
     return out.select(
         id_col,
         "label",
@@ -242,55 +202,67 @@ def run_image_caption_quality(
     df: DataFrame, id_col: str = "image_id", text_col: str = "caption"
 ) -> DataFrame:
     """Fused image+caption keep/drop over the input_hint schema
-    (image_id, bytes, w, h, fmt, caption, phash).
+    (image_id, bytes, w, h, fmt, caption, phash), for any DataFrame.
 
     Plan shape (100 TB design):
       1. ONE scan: the decode mapInPandas emits narrow columns + stats
          together — ``bytes`` dies at the scan, no join needed;
-      2. caption scoring on the narrow projection (the Arrow caption
-         stage + two tiny aggs + exact bottom-n);
+      2. the Arrow caption stage (:func:`caption_label_frame`) on the
+         narrow rows, then the shared scoring body
+         (:func:`_score_images`): project, cache, two tiny aggs, exact
+         bottom-n;
       3. drop_reason taxonomy feeds the lineage counters.
-    """
-    from .images.decode import decode_and_project, with_image_issues
 
-    projected = with_image_issues(decode_and_project(df))
-    joined = caption_scores(projected, id_col=id_col, text_col=text_col)
-    return _finalize_image_output(joined, id_col)
+    Returns exactly the rows :func:`run_image_caption_quality_from_path`
+    returns for the same parquet corpus.
+    """
+    from .images.decode import decode_and_project
+
+    return _score_images(
+        caption_label_frame(decode_and_project(df), text_col), id_col, text_col
+    )
 
 
 def run_image_caption_quality_from_path(
     spark, path: str, id_col: str = "image_id", text_col: str = "caption",
-    fast_captions: bool = True, stage_times: dict | None = None,
+    stage_times: dict | None = None,
 ) -> DataFrame:
     """Like :func:`run_image_caption_quality` but scanning the parquet
-    corpus with the python-native reader (images.decode.decode_scan) so
-    the binary payload never crosses the JVM↔Python boundary.
-
-    ``fast_captions=True`` additionally computes the caption features +
-    pseudo-labels inside the same Arrow pass (text.fast) — the
-    north-star dataflow: decode, langid, perplexity and heuristics all
-    in one vectorized Python stage, keep/drop + scrub in Catalyst.
+    files directly under ``path`` with the python-native reader
+    (images.decode.decode_scan), so the binary payload never crosses the
+    JVM↔Python boundary.  Decode, caption features and pseudo-labels
+    run in that one Arrow pass — the caption stage is the same
+    ``text.fast.caption_label_batch`` :func:`caption_label_frame` runs,
+    so both routes return identical rows.  ``stage_times`` is passed to
+    :func:`caption_scores`.
     """
-    from .images.decode import decode_scan, with_image_issues
+    from .images.decode import decode_scan
 
     # decode_scan already sizes its task count to the cluster; an extra
     # ensure_parallelism here costs a ~3 s .rdd partition probe on the
     # python-source plan and never changes the layout.
-    scanned = decode_scan(spark, path, with_caption_features=fast_captions)
-    projected = with_image_issues(scanned)
+    labelled = decode_scan(spark, path, with_caption_features=True, text_col=text_col)
+    return _score_images(labelled, id_col, text_col, stage_times)
+
+
+def _score_images(
+    labelled: DataFrame, id_col: str, text_col: str, stage_times: dict | None = None
+) -> DataFrame:
+    """The body both image routes share: image issue flags, then the
+    caption scoring passes, then the keep/drop_reason output."""
+    from .images.decode import with_image_issues
+
     # project down to what the scoring passes + final output actually
     # read BEFORE the persist: caption_scores caches its input frame,
     # and caching all ~31 scan columns (w/h/fmt/phash/raw feature
     # ratios/...) materialises ~2.5x the bytes the pipeline ever
     # consumes again (guide §2.3 "project before the exchange" — the
     # cache write is the exchange here)
-    needed = [
+    projected = with_image_issues(labelled).select(
         id_col, text_col, "decode_ok", "fmt_ok", "psnr_db", "brightness",
         "is_dark", "is_light", "is_low_information", "is_blurry",
-    ]
-    if fast_captions:
-        needed += ["label", "pred_probs"]
-    projected = projected.select(*needed)
+        "label", "pred_probs",
+    )
     joined = caption_scores(
         projected, id_col=id_col, text_col=text_col, stage_times=stage_times
     )

@@ -3,7 +3,8 @@
 Computes, per Arrow batch inside a pandas/mapInPandas worker, every
 caption feature (heuristic rules, marker langid, hashed-bigram
 perplexity), the pseudo-label and pred_probs.  It is the only
-implementation: batch and streaming reach it through
+implementation, and :func:`caption_label_batch` is its one entry point:
+batch, streaming and the text gates call it through
 ``pipeline.caption_label_frame``, the image scan through
 ``images.decode.decode_scan(with_caption_features=True)``.  Its twins
 are the DuckDB SQL oracles (``rules.quality_features_sql_exprs``,
@@ -38,6 +39,15 @@ _LANG_SETS = [frozenset(LANG_MARKERS[lang]) for lang in LANG_ORDER]
 
 # frozen scorer weights — single source of truth lives in pipeline.py
 from .. import pipeline as _pl  # noqa: E402  (cycle-safe: only constants used)
+
+#: Spark DDL of the columns :func:`caption_label_batch` returns
+CAPTION_FIELDS = (
+    "n_chars bigint, n_words bigint, digit_ratio double, alpha_ratio double, "
+    "punct_ratio double, upper_ratio double, repetition_ratio double, "
+    "stopword_ratio double, pred_lang string, ppl double, "
+    "label int, pred_probs array<double>"
+)
+CAPTION_NAMES = frozenset(f.split(" ", 1)[0] for f in CAPTION_FIELDS.split(", "))
 
 #: cross-batch memo for the hashed-bigram log-prob table: natural-language
 #: bigrams repeat heavily, so each worker amortises the md5 cost to the
@@ -208,3 +218,25 @@ def label_and_probs_batch(feat: dict[str, np.ndarray]) -> tuple[np.ndarray, np.n
         ),
     ).astype(np.int32)
     return label, probs
+
+
+def caption_label_batch(texts: pd.Series) -> dict:
+    """The caption stage for one batch: every :data:`CAPTION_FIELDS`
+    column, keyed by name, for a Series of captions.
+
+    Null text: ratios/stopword/repetition are 0.0, pred_lang is 'und',
+    ppl is the fallback, n_chars/n_words are NULL (as SQL ``length(NULL)``
+    in the twins), and the scorer's f_len term is 1.0 (the twins'
+    ``least(NULL, 50)`` skips the null) — fed here by patching n_words
+    to 50 for null rows before the scorer.
+    """
+    feats = caption_features_batch(texts.tolist())
+    null_mask = texts.isna().to_numpy()
+    scored = feats
+    if null_mask.any():
+        scored = {**feats, "n_words": np.where(null_mask, 50, feats["n_words"])}
+        for k in ("n_chars", "n_words"):
+            feats[k] = pd.arrays.IntegerArray(feats[k].astype(np.int64), null_mask.copy())
+    feats["label"], probs = label_and_probs_batch(scored)
+    feats["pred_probs"] = list(probs)
+    return feats

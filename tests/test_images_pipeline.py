@@ -3,6 +3,7 @@ pipeline, and checkpoint/resume (FIXTURES.md F1/F6)."""
 
 import glob
 import os
+import re
 
 import numpy as np
 import pytest
@@ -12,8 +13,12 @@ from sparkclean import checkpoint as ckpt
 from sparkclean import synth
 from sparkclean.checkpoint import load_manifest, run_checkpointed
 from sparkclean.images import codec
-from sparkclean.images.decode import decode_stats, phash_duplicate_clusters, with_image_issues
-from sparkclean.pipeline import run_image_caption_quality
+from sparkclean.images.decode import (
+    decode_and_project,
+    phash_duplicate_clusters,
+    with_image_issues,
+)
+from sparkclean.pipeline import run_image_caption_quality, run_image_caption_quality_from_path
 
 N = 600
 
@@ -58,7 +63,7 @@ def test_synth_schema_and_determinism(spark, corpus):
 
 
 def test_decode_stats_validation(spark, corpus):
-    stats = with_image_issues(decode_stats(corpus)).cache()
+    stats = with_image_issues(decode_and_project(corpus)).cache()
     n = stats.count()
     assert n == N
     agg = stats.agg(
@@ -69,8 +74,7 @@ def test_decode_stats_validation(spark, corpus):
     assert agg["ok"] == N and agg["fmt"] == N
     assert agg["min_psnr"] >= 40.0
     # recomputed phash equals stored phash for png rows (lossless path)
-    joined = corpus.select("image_id", "phash", "fmt").join(stats, "image_id")
-    png_bad = joined.where(
+    png_bad = stats.where(
         (F.col("fmt") == "png") & (F.col("phash") != F.col("phash_recomputed"))
     ).count()
     assert png_bad == 0
@@ -82,7 +86,7 @@ def test_decode_matches_local_reference(spark, corpus):
     sample = corpus.limit(20).collect()
     stats = {
         r["image_id"]: r
-        for r in decode_stats(spark.createDataFrame(sample, corpus.schema)).collect()
+        for r in decode_and_project(spark.createDataFrame(sample, corpus.schema)).collect()
     }
     for row in sample:
         px, fmt = codec.decode(bytes(row["bytes"]))
@@ -124,22 +128,104 @@ def test_image_caption_pipeline(spark, corpus):
     assert leaked == 0
 
 
-def test_decode_scan_matches_dataframe_path(spark, corpus, tmp_path):
-    """The python-native parquet scan must produce identical pipeline
-    output to the JVM-scan path."""
-    from sparkclean.pipeline import run_image_caption_quality_from_path
-
-    path = str(tmp_path / "corpus")
-    corpus.repartition(8).write.parquet(path)
+def _both_routes(spark, df, path, **kw):
+    """Write ``df`` as flat parquet under ``path`` and score it through
+    the DataFrame route and the python-native scan route; rows sorted
+    by image_id."""
+    df.repartition(8).write.parquet(path)
     a = (
-        run_image_caption_quality(spark.read.parquet(path))
+        run_image_caption_quality(spark.read.parquet(path), **kw)
         .orderBy("image_id")
         .collect()
     )
-    b = run_image_caption_quality_from_path(spark, path).orderBy("image_id").collect()
+    b = run_image_caption_quality_from_path(spark, path, **kw).orderBy("image_id").collect()
+    return a, b
+
+
+def test_decode_scan_matches_dataframe_path(spark, corpus, tmp_path):
+    """The python-native parquet scan must produce identical pipeline
+    output to the JVM-scan path, NULL captions included: both routes
+    run one caption batch function, null-text rules and all."""
+    null_ids = [r["image_id"] for r in corpus.select("image_id").orderBy("image_id").limit(2).collect()]
+    with_nulls = corpus.withColumn(
+        "caption",
+        F.when(F.col("image_id").isin(null_ids), F.lit(None).cast("string")).otherwise(
+            F.col("caption")
+        ),
+    )
+    a, b = _both_routes(spark, with_nulls, str(tmp_path / "corpus"))
     assert len(a) == len(b) == N
     for ra, rb in zip(a, b):
         assert ra == rb
+    nulls = [r for r in a if r["image_id"] in null_ids]
+    assert len(nulls) == 2 and all(r["scrubbed_text"] is None for r in nulls)
+
+
+def test_decode_scan_honours_text_col(spark, corpus, tmp_path):
+    """A caption column under another name scores identically through
+    both routes.  A text column the files lack is a ValueError naming
+    it, raised at plan build.  A stale ``label`` column in the files is
+    replaced by the computed one on both routes."""
+    from sparkclean.images.decode import decode_scan
+
+    renamed = corpus.withColumnRenamed("caption", "alt_text")
+    path = str(tmp_path / "alt_text")
+    a, b = _both_routes(spark, renamed, path, text_col="alt_text")
+    assert len(a) == len(b) == N
+    for ra, rb in zip(a, b):
+        assert ra == rb
+    with pytest.raises(ValueError, match="'missing'"):
+        decode_scan(spark, path, with_caption_features=True, text_col="missing")
+
+    stale = renamed.limit(60).withColumn("label", F.lit(7))
+    c, d = _both_routes(spark, stale, str(tmp_path / "stale"), text_col="alt_text")
+    assert c == d and len(c) == 60
+    assert {r["label"] for r in c} <= {0, 1, 2}
+
+
+def test_dataframe_route_caches_only_projected_columns(spark):
+    """run_image_caption_quality caches the projection the scoring
+    passes read, not every scan and feature column."""
+    # a fresh, uncached input: the module corpus (and outputs other
+    # tests cached over it) would substitute their own relations
+    out = run_image_caption_quality(synth.synth_images(spark, 40, with_images=True, partitions=2))
+    plan = out._jdf.queryExecution().withCachedData().toString()
+    lines = [ln for ln in plan.splitlines() if "InMemoryRelation" in ln]
+    assert len(lines) == 1, plan
+    cached = re.findall(r"(\w+)#\d+", lines[0].split("InMemoryRelation", 1)[1].split("]", 1)[0])
+    assert cached == [
+        "image_id", "caption", "decode_ok", "fmt_ok", "psnr_db", "brightness",
+        "is_dark", "is_light", "is_low_information", "is_blurry",
+        "label", "pred_probs",
+    ]
+
+
+def test_cli_routes_partitioned_parquet_through_spark_read(spark, tmp_path):
+    """With no flag, the CLI scores a hive-partitioned corpus (files only
+    under ``part=*/``, which the python-native scan cannot list) through
+    the spark.read route."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    corpus = str(tmp_path / "partitioned")
+    synth.synth_images(spark, 200, with_images=True, partitions=2).withColumn(
+        "part", F.pmod(F.xxhash64("image_id"), F.lit(2))
+    ).write.partitionBy("part").parquet(corpus)
+    assert not glob.glob(os.path.join(corpus, "*.parquet"))
+    out = str(tmp_path / "scored")
+    script = (
+        "from sparkclean.cli import main; "
+        f"main(['--input', {corpus!r}, '--output', {out!r}, "
+        "'--buckets', '4', '--master', 'local[2]'])"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    counters = json.loads("{" + res.stdout.split("{", 1)[1].rsplit("}", 1)[0] + "}")
+    assert counters["rows_scored"] == 200
 
 
 def test_decode_scan_rejects_unmappable_column_type(spark, tmp_path):
@@ -169,37 +255,6 @@ def test_decode_scan_rejects_unmappable_column_type(spark, tmp_path):
         match=r"column 'counter'.*UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION",
     ):
         decode_scan(spark, str(path))
-
-
-def test_fast_caption_path_matches_sql_path(spark, corpus, tmp_path):
-    """Caption features fused into the scan (decode_scan
-    with_caption_features=True) must agree with the separate caption
-    stage (pipeline.caption_label_frame): identical labels/keep/scrub,
-    scores to 1e-6."""
-    from sparkclean.pipeline import run_image_caption_quality_from_path
-
-    path = str(tmp_path / "corpus_fast")
-    corpus.repartition(8).write.parquet(path)
-    slow = {
-        r["image_id"]: r
-        for r in run_image_caption_quality_from_path(
-            spark, path, fast_captions=False
-        ).collect()
-    }
-    fast = {
-        r["image_id"]: r
-        for r in run_image_caption_quality_from_path(
-            spark, path, fast_captions=True
-        ).collect()
-    }
-    assert set(slow) == set(fast) and len(slow) == N
-    for k, a in slow.items():
-        b = fast[k]
-        assert a["label"] == b["label"], k
-        assert a["keep"] == b["keep"], k
-        assert a["is_label_issue"] == b["is_label_issue"], k
-        assert a["scrubbed_text"] == b["scrubbed_text"], k
-        assert abs(a["quality_score"] - b["quality_score"]) <= 1e-6, k
 
 
 def test_checkpoint_resume(spark, corpus, tmp_path):
@@ -352,7 +407,7 @@ def test_phash_near_duplicates_on_decoded_corpus(spark, corpus):
         phash_near_duplicates,
     )
 
-    stats = decode_stats(corpus).select("image_id", "phash_recomputed")
+    stats = decode_and_project(corpus).select("image_id", "phash_recomputed")
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in phash_near_duplicates(
@@ -407,7 +462,7 @@ def test_failed_decodes_get_null_phash_not_sentinel(spark):
     df = spark.createDataFrame(
         rows, "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
     )
-    stats = decode_stats(df).cache()
+    stats = decode_and_project(df).cache()
     got = {r["image_id"]: r["phash_recomputed"] for r in stats.collect()}
     assert got["ok_1"] is not None and got["ok_1"] == got["ok_2"]
     for bad in ("null_1", "null_2", "corrupt_1", "corrupt_2"):

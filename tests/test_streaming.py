@@ -63,7 +63,9 @@ def test_score_stream_available_now(spark, corpus, tmp_path):
 
     batch = {
         r["image_id"]: r
-        for r in caption_scores(static, id_col="image_id", text_col="caption")
+        for r in caption_scores(
+            caption_label_frame(static, "caption"), id_col="image_id", text_col="caption"
+        )
         .select("image_id", "label", "pred_lang", "quality_score", "scrubbed_text")
         .collect()
     }
