@@ -1396,8 +1396,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return dedup_simhash.simhash_candidate_pairs(_docs(spark, sf))
 
     def simhash_fingerprints(spark, sf):
-        # Arrow-vectorized production path (with_simhash); simhash_col is
-        # the Catalyst twin kept for oracle-parity tests
+        # token hashes in Catalyst, the 32 bit votes in one Arrow kernel
         return dedup_simhash.with_simhash(
             _docs(spark, sf).select("doc_id", "text"), "text", "simhash"
         ).select("doc_id", "simhash")

@@ -1,8 +1,9 @@
-"""MinHash + LSH near-duplicate detection, fully Catalyst-native.
+"""MinHash + LSH near-duplicate detection — Arrow kernels with DuckDB
+SQL twins.
 
 Dataflow (shingle → minhash → band → bucket-join → exact-Jaccard verify):
 
-1. word-trigram shingles, distinct, hashed to 60 bits (JVM md5 — exactly
+1. word-trigram shingles, distinct, hashed to 60 bits (md5 — exactly
    reproducible in the DuckDB oracle);
 2. H=32 minhash signature via universal hashing
    ``(a_i * (s mod 2^31) + b_i) mod P`` (P = 2^61-1; products stay under
@@ -13,8 +14,11 @@ Dataflow (shingle → minhash → band → bucket-join → exact-Jaccard verify)
    spot and AQE skew-join splits them;
 5. exact Jaccard on the shingle sets filters false positives.
 
-Coefficients are frozen (seeded) and inlined as literals, so the whole
-operator is oracle-expressible in DuckDB.
+Steps 1-3 run in the Arrow kernels :func:`_content_members` and
+:func:`_bucket_rows` (per-document Python twins ``_doc_*_py``); the
+band join and the verify are Spark joins.  Coefficients are frozen
+(seeded) and inlined as literals, so the whole operator is
+oracle-expressible in DuckDB.
 """
 
 from __future__ import annotations
@@ -24,11 +28,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..text.shared import (
-    ascii_lower_col,
     ascii_lower_sql,
     hash60_col,
     hash60_sql,
-    words_col,
+    trim_memo,
     words_sql,
 )
 
@@ -50,7 +53,7 @@ _PKG_ROOT = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(
 
 #: cross-batch memo for the 60-bit md5 hash — shingles repeat heavily in
 #: natural corpora (boilerplate, near-dups), so each worker pays md5 only
-#: on first sight.  Bounded, same discipline as text.fast._LOGP_MEMO.
+#: on first sight.  Bounded by shared.trim_memo, like text.fast._LOGP_MEMO.
 _H60_MEMO: dict[str, int] = {}
 _H60_MEMO_MAX = 1_000_000
 
@@ -61,19 +64,18 @@ def _h60(s: str) -> int:
     if v is None:
         import hashlib
 
-        if len(_H60_MEMO) > _H60_MEMO_MAX:
-            _H60_MEMO.clear()
         v = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
         _H60_MEMO[s] = v
+        trim_memo(_H60_MEMO, _H60_MEMO_MAX)
     return v
 
 
 def _doc_shingles_py(text: str) -> list[int] | None:
     """Distinct hashed word-trigram shingles of one doc — the exact
-    kernel twin of :func:`shingles_from_words` over
-    words_py(ascii_lower_py(text)): same tokenizer, same ``' '`` gram
-    join, same md5 hash60, first-occurrence distinct order.  None for
-    docs with < 3 words (the members filter)."""
+    kernel twin of :func:`shingles_sql` (and of :func:`shingles_from_words`
+    over words_col(ascii_lower_col(text))): same tokenizer, same ``' '``
+    gram join, same md5 hash60, first-occurrence distinct order.  None
+    for docs with < 3 words (the members filter)."""
     from ..text.shared import ascii_lower_py, words_py
 
     words = words_py(ascii_lower_py(text))
@@ -88,7 +90,7 @@ def _doc_shingles_py(text: str) -> list[int] | None:
 
 def _doc_sig_py(sh: list[int]) -> np.ndarray:
     """Minhash signature — integer-exact twin of
-    :func:`minhash_signature_col`: (a*(s mod 2^31)+b) mod P, min per
+    :func:`minhash_signature_sql`: (a*(s mod 2^31)+b) mod P, min per
     hash function (products < 2^62, no int64 overflow)."""
     sm = np.asarray(sh, dtype=np.int64) % np.int64(1 << 31)
     mat = (sm[:, None] * _COEF_A_NP[None, :] + _COEF_B_NP[None, :]) % np.int64(
@@ -98,7 +100,7 @@ def _doc_sig_py(sh: list[int]) -> np.ndarray:
 
 
 def _doc_buckets_py(sig: np.ndarray) -> list[int]:
-    """Band bucket keys — twin of :func:`band_buckets_col`:
+    """Band bucket keys — twin of :func:`band_buckets_sql`:
     hash60('band,s1,s2,s3,s4')."""
     out = []
     for b in range(BANDS):
@@ -114,8 +116,13 @@ def _doc_buckets_py(sig: np.ndarray) -> list[int]:
 
 
 def _set_key_py(sh: list[int]) -> int:
-    """Twin of :func:`shingle_set_key_col`: hash60 of the ascending
-    sorted values comma-joined."""
+    """Twin of :func:`shingle_set_key_sql`: hash60 of the ascending
+    sorted values comma-joined — the order-independent key of a
+    shingle SET, used to collapse exact-duplicate content.  Docs whose
+    shingle sets are equal have Jaccard exactly 1, so they are always
+    near-duplicates at any threshold <= 1 and collapse to one
+    representative before the band join (the reference's
+    exact-duplicate-sets correction, knn_graph.py:492-566)."""
     return _h60(",".join(str(v) for v in sorted(sh)))
 
 
@@ -139,13 +146,6 @@ def shingles_from_words(w: Column, n: int = 3) -> Column:
     )
 
 
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct hashed word n-gram shingles (array<long>).  Convenience
-    form for small inputs / oracle parity; hot paths should materialise
-    the words column and call :func:`shingles_from_words`."""
-    return shingles_from_words(words_col(ascii_lower_col(text)), n)
-
-
 def shingles_sql(text: str, n: int = 3) -> str:
     w = words_sql(ascii_lower_sql(text))
     gram = " || ' ' || ".join(f"w[i+{off}]" for off in range(n))
@@ -157,31 +157,6 @@ def shingles_sql(text: str, n: int = 3) -> str:
     )
 
 
-def minhash_signature_col(shingles: Column) -> Column:
-    """H-element minhash signature (array<long>); empty set → all P.
-
-    Single fold over the shingle array with an array-of-running-minima
-    accumulator — one pass over the data and a plan 32× smaller than
-    one aggregate per hash function.
-    """
-    a_arr = F.array(*[F.lit(a).cast("long") for a in COEF_A])
-    b_arr = F.array(*[F.lit(b).cast("long") for b in COEF_B])
-    init = F.array_repeat(F.lit(MERSENNE_P).cast("long"), NUM_HASHES)
-
-    def fold(acc: Column, s: Column) -> Column:
-        sm = s % F.lit(1 << 31)
-        return F.transform(
-            acc,
-            lambda m, i: F.least(
-                m,
-                (F.element_at(a_arr, i + 1) * sm + F.element_at(b_arr, i + 1))
-                % F.lit(MERSENNE_P),
-            ),
-        )
-
-    return F.aggregate(shingles, init, fold)
-
-
 def minhash_signature_sql(shingles: str) -> str:
     parts = [
         (
@@ -191,16 +166,6 @@ def minhash_signature_sql(shingles: str) -> str:
         for a, b in zip(COEF_A, COEF_B)
     ]
     return f"(SELECT [{', '.join(parts)}] FROM (SELECT {shingles} AS sh))"
-
-
-def band_buckets_col(sig: Column) -> Column:
-    """Array of BANDS bucket keys: hash60('band_idx:s1,s2,s3,s4')."""
-    keys = []
-    for band in range(BANDS):
-        lo = band * ROWS_PER_BAND
-        parts = [F.element_at(sig, i + 1).cast("string") for i in range(lo, lo + ROWS_PER_BAND)]
-        keys.append(hash60_col(F.concat_ws(",", F.lit(str(band)), *parts)))
-    return F.array(*keys)
 
 
 def band_buckets_sql(sig: str) -> str:
@@ -218,18 +183,6 @@ def jaccard_col(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def shingle_set_key_col(sh: Column) -> Column:
-    """Order-independent 60-bit key of a shingle SET (hash of the sorted
-    comma-joined values) — the exact-duplicate-content collapse key.
-    Docs whose shingle sets are equal have Jaccard exactly 1, so they are
-    always near-duplicates at any threshold <= 1 and can be collapsed to
-    one representative before the band join (the reference's
-    exact-duplicate-sets correction, knn_graph.py:492-566)."""
-    return hash60_col(
-        F.array_join(F.transform(F.array_sort(sh), lambda x: x.cast("string")), ",")
-    )
-
-
 def shingle_set_key_sql(sh: str) -> str:
     return hash60_sql(
         f"array_to_string(list_transform(list_sort({sh}), x -> x::VARCHAR), ',')"
@@ -243,14 +196,12 @@ def _content_members(
     shingle-set collapse key.
 
     One Arrow kernel stage (tokenize → hash60 trigrams → distinct →
-    set key), bit-identical to the former interpreted Catalyst
-    projection (words_py IS the engine tokenizer; same md5 hash60; same
-    first-occurrence distinct; same sorted-join set key — the Catalyst
-    builders remain in this module as the oracle-SQL generators and the
-    parity-test reference).  The interpreted HOF chain re-evaluated
-    per consumer subtree and cost ~10x the kernel per doc (guide §4.2);
-    null texts and docs with < 3 words are excluded exactly as the
-    ``size(_w) >= 3`` filter did."""
+    set key), bit-identical to the ``mmem`` CTE of the DuckDB twin
+    (words_py IS the engine tokenizer; same md5 hash60; same
+    first-occurrence distinct; same sorted-join set key).  An
+    interpreted Catalyst HOF chain for the same shingles re-evaluated
+    per consumer subtree and cost ~10x the kernel per doc; null texts
+    and docs with < 3 words are excluded."""
     from ..skew import ensure_parallelism
 
     id_type = dict(zip(df.columns, [f.dataType.simpleString() for f in df.schema]))[
@@ -296,8 +247,8 @@ def _content_members(
 def _bucket_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """``(_id, _gk, _bucket)`` — BANDS rows per kept doc, the exploded
     LSH band-bucket keys.  Fuses shingle → signature → band keys into
-    one Arrow kernel (integer-exact twins of minhash_signature_col +
-    band_buckets_col); only scalars leave the stage, so the band join
+    one Arrow kernel (integer-exact twins of minhash_signature_sql +
+    band_buckets_sql); only scalars leave the stage, so the band join
     still carries ~16 bytes/row."""
     from ..skew import ensure_parallelism
 

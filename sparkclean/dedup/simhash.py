@@ -1,6 +1,11 @@
-"""32-bit SimHash document fingerprints — Catalyst-native with SQL twin.
+"""32-bit SimHash document fingerprints — an Arrow bit-vote kernel with
+a DuckDB SQL twin.
 
 simhash(doc) = Σ_j 2^j · [ Σ_{t ∈ distinct tokens} (bit_j(hash60(t)) ? +1 : -1) > 0 ]
+
+:func:`with_simhash` tokenises and hashes with Spark column
+expressions (:func:`token_hashes_col`), then runs the 32 bit votes in
+one Arrow kernel over the materialised hash array.
 
 Near-dup candidates share 16-bit halves (two-block Hamming banding):
 any pair within Hamming distance 1 shares at least one half exactly.
@@ -31,46 +36,15 @@ def token_hashes_col(text: Column) -> Column:
     return F.transform(w, lambda t: hash60_col(t))
 
 
-def _bit_vote(j: int):
-    def fold(acc: Column, h: Column) -> Column:
-        return acc + F.when(F.shiftright(h, j) % 2 == 1, F.lit(1)).otherwise(F.lit(-1))
-
-    return fold
-
-
-def simhash_from_hashes(hs: Column) -> Column:
-    """Simhash from a MATERIALISED token-hash column (array<long>).  The 32
-    per-bit folds each re-evaluate their input expression, so callers must
-    hoist the tokenisation into its own column first — otherwise the text
-    is split+hashed 32x per row."""
-    out = F.lit(0).cast("long")
-    # shiftright needs a Python-int bit count, so unroll the 32 bit votes
-    # into one wide projection (still a single codegen stage).
-    for j in range(BITS):
-        vote = F.aggregate(hs, F.lit(0).cast("long"), _bit_vote(j))
-        out = out + F.when(vote > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
-
-
-def simhash_col(text: Column) -> Column:
-    """Convenience form for small inputs / oracle parity; hot paths go
-    through :func:`with_simhash`, which materialises the token hashes."""
-    return simhash_from_hashes(token_hashes_col(text))
-
-
 def simhash_from_hashes_udf():
     """Arrow-vectorized simhash over a materialised token-hash column.
 
     The bit votes are INTEGER sums (Σ ±1), so unlike the float kernels
     no accumulation-order discipline is needed — bincount over the
-    exploded hash array is exact and ~100x the 32-fold interpreted
-    projection.  Empty AND NULL token lists both yield simhash 0 —
-    matching the Catalyst fold exactly: each bit contributes
-    ``when(vote > 0, bit).otherwise(0)``, and a NULL vote (aggregate
-    over a NULL array) falls into the otherwise-0 branch, as does the
-    SQL twin's ``CASE WHEN NULL > 0 … ELSE 0``.  Null-text corpora thus
-    behave identically on the fast and oracle paths instead of raising
-    TypeError on len(None)."""
+    exploded hash array is exact and ~100x a 32-fold interpreted
+    Catalyst projection.  Empty AND NULL token lists both yield simhash
+    0, as in the SQL twin, where a NULL vote falls into the ``ELSE 0``
+    branch of ``CASE WHEN NULL > 0 …``."""
 
     @pandas_udf("long")
     def simhash(hs: pd.Series) -> pd.Series:

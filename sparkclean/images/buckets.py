@@ -1,5 +1,5 @@
-"""Aspect-ratio bucketing for multi-aspect image training — Catalyst +
-SQL twins.
+"""Aspect-ratio bucketing for multi-aspect image training — an Arrow
+kernel with a DuckDB SQL twin.
 
 Diffusion/vision training at scale groups images into a frozen set of
 aspect-ratio buckets so each batch shares one resolution (the SDXL
@@ -14,26 +14,23 @@ differ by ulps across engines — enough to flip an argmin between two
 near-equidistant buckets and break hash-exact twins.  Instead the
 distance |w/h − bw/bh| is computed as ``abs(w·bh − h·bw) / (h·bh)``:
 integer cross-multiplication plus ONE IEEE-754 division, which is
-correctly rounded and therefore bit-identical in the JVM, DuckDB and
-NumPy.  Same argmin for any monotone distance in aspect space; ties
-break on the first bucket in the frozen enumeration order.
+correctly rounded and therefore bit-identical in NumPy and DuckDB.
+Same argmin for any monotone distance in aspect space; ties break on
+the first bucket in the frozen enumeration order.
 
-Scale shape: entirely row-local, no join/shuffle/window.  The
-production route is ONE Arrow batch kernel — a (rows x 49) NumPy
-broadcast argmin (int64 cross-mult, one float64 division, np.argmin's
-first-min = the idx tie-break).  The Catalyst route (array_min over a
-49-struct literal array) is value-identical but its ~600-node
-expression BLOWS the janino method limit — whole-stage codegen fails
-and every job pays a constant ~2 s interpreted/analysis tax (the
-CLAUDE.md round-2/3 literal-tree hazard, measured here at sf0.01) —
-so it is the small-data/oracle twin only.
+Scale shape: entirely row-local, no join/shuffle/window — ONE Arrow
+batch kernel, a (rows x 49) NumPy broadcast argmin (int64 cross-mult,
+one float64 division, np.argmin's first-min = the idx tie-break).  The
+same argmin as a Spark expression (array_min over 49 literal structs)
+would be ~600 nodes, past the janino method limit: whole-stage codegen
+falls back and every job pays a ~2 s constant tax.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -64,26 +61,6 @@ def _enumerate_buckets() -> list[tuple[int, int]]:
 
 BUCKETS: list[tuple[int, int]] = _enumerate_buckets()
 
-
-def _best_bucket(w: Column, h: Column) -> Column:
-    """struct(score, idx, bw, bh) of the nearest bucket — array_min over
-    the literal bucket table; struct ordering gives the (score, idx)
-    tie-break."""
-    entries = [
-        F.struct(
-            (
-                F.abs(w * F.lit(bh) - h * F.lit(bw)).cast("double")
-                / (h * F.lit(bh)).cast("double")
-            ).alias("score"),
-            F.lit(i).alias("idx"),
-            F.lit(bw).alias("bw"),
-            F.lit(bh).alias("bh"),
-        )
-        for i, (bw, bh) in enumerate(BUCKETS)
-    ]
-    return F.array_min(F.array(*entries))
-
-
 _BW = np.array([bw for bw, _ in BUCKETS], dtype=np.int64)
 _BH = np.array([bh for _, bh in BUCKETS], dtype=np.int64)
 
@@ -91,8 +68,8 @@ _BH = np.array([bh for _, bh in BUCKETS], dtype=np.int64)
 def assign_buckets_np(w: np.ndarray, h: np.ndarray) -> np.ndarray:
     """Vectorised nearest-bucket indices for int64 (n,) dims, −1 where
     a dim is non-positive.  Same float64 division and first-min
-    tie-break as the Catalyst and DuckDB routes (all three
-    correctly-rounded IEEE, hence bit-identical)."""
+    tie-break as the DuckDB twin (both correctly-rounded IEEE, hence
+    bit-identical)."""
     ok = (w > 0) & (h > 0)
     hs = np.where(ok, h, 1)  # keep the masked rows' division finite
     ws = np.where(ok, w, 1)
@@ -108,51 +85,32 @@ def assign_aspect_buckets(
     w_col: str = "w",
     h_col: str = "h",
     id_col: str = "image_id",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(id, w, h, bucket_id, bucket_w, bucket_h) per image.  Rows with
     non-positive or null dimensions get bucket_id −1 (null bucket dims)
     so every input row appears in the output."""
-    if use_arrow:
 
-        @pandas_udf("long")
-        def _bucket(w: pd.Series, h: pd.Series) -> pd.Series:
-            wv = w.fillna(0).to_numpy(dtype=np.int64)
-            hv = h.fillna(0).to_numpy(dtype=np.int64)
-            return pd.Series(assign_buckets_np(wv, hv))
+    @pandas_udf("long")
+    def _bucket(w: pd.Series, h: pd.Series) -> pd.Series:
+        wv = w.fillna(0).to_numpy(dtype=np.int64)
+        hv = h.fillna(0).to_numpy(dtype=np.int64)
+        return pd.Series(assign_buckets_np(wv, hv))
 
-        bid = df.withColumn(
-            "_ab_id", _bucket(F.col(w_col), F.col(h_col))
-        )
-        ok = F.col("_ab_id") >= 0
-        bw_arr = F.array(*[F.lit(bw) for bw, _ in BUCKETS])
-        bh_arr = F.array(*[F.lit(bh) for _, bh in BUCKETS])
-        return bid.select(
-            id_col,
-            w_col,
-            h_col,
-            F.col("_ab_id").alias("bucket_id"),
-            F.when(ok, F.element_at(bw_arr, (F.col("_ab_id") + 1).cast("int")))
-            .cast("long")
-            .alias("bucket_w"),
-            F.when(ok, F.element_at(bh_arr, (F.col("_ab_id") + 1).cast("int")))
-            .cast("long")
-            .alias("bucket_h"),
-        )
-
-    w = F.col(w_col).cast("long")
-    h = F.col(h_col).cast("long")
-    ok = w.isNotNull() & h.isNotNull() & (w > 0) & (h > 0)
-    best = _best_bucket(w, h)
-    return df.select(
+    bid = df.withColumn("_ab_id", _bucket(F.col(w_col), F.col(h_col)))
+    ok = F.col("_ab_id") >= 0
+    bw_arr = F.array(*[F.lit(bw) for bw, _ in BUCKETS])
+    bh_arr = F.array(*[F.lit(bh) for _, bh in BUCKETS])
+    return bid.select(
         id_col,
         w_col,
         h_col,
-        F.when(ok, best["idx"].cast("long")).otherwise(F.lit(-1)).alias(
-            "bucket_id"
-        ),
-        F.when(ok, best["bw"].cast("long")).alias("bucket_w"),
-        F.when(ok, best["bh"].cast("long")).alias("bucket_h"),
+        F.col("_ab_id").alias("bucket_id"),
+        F.when(ok, F.element_at(bw_arr, (F.col("_ab_id") + 1).cast("int")))
+        .cast("long")
+        .alias("bucket_w"),
+        F.when(ok, F.element_at(bh_arr, (F.col("_ab_id") + 1).cast("int")))
+        .cast("long")
+        .alias("bucket_h"),
     )
 
 

@@ -12,7 +12,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .scores import adjust_pred_probs, normalized_entropy
+from .scores import normalized_entropy
 
 
 def ood_entropy_score(probs: Column, num_classes: int) -> Column:

@@ -78,32 +78,17 @@ def boosted_predicted_label(label: Column, probs: Column) -> Column:
     return (F.array_position(boosted, F.array_max(boosted)) - F.lit(1)).cast("int")
 
 
-def adjust_pred_probs(probs: Column, thresholds: list[float]) -> Column:
+def with_adjusted_probs(
+    df, probs_col: str, thresholds: list[float], out_col: str
+):
     """Subtract per-class confident thresholds, shift by max(t), renormalise
     rows (label_quality_utils.py:11-65). ``thresholds`` is the collected
     K-vector, inlined as a literal array (broadcast-by-value).
 
-    Column-expression form for SMALL data / oracle parity only: the
-    normalising sum is referenced inside the per-element lambda, so
-    interpreted HOFs re-evaluate the K-term fold per element (O(K²)).
-    DataFrame callers use :func:`with_adjusted_probs`, which materialises
-    the shifted array and its sum as columns first — identical values,
-    single evaluation."""
-    t = _arr(thresholds)
-    t_max = float(max(thresholds))
-    shifted = F.zip_with(probs, t, lambda p, th: p.cast("double") - th + F.lit(t_max))
-    row_sum = F.aggregate(shifted, F.lit(0.0), lambda acc, x: acc + x)
-    return F.transform(shifted, lambda x: x / row_sum)
-
-
-def with_adjusted_probs(
-    df, probs_col: str, thresholds: list[float], out_col: str
-):
-    """DataFrame form of :func:`adjust_pred_probs` with the shifted array
-    and its row sum materialised as their own columns, so the fold
-    evaluates once per row instead of once per ELEMENT (the
-    interpreted-HOF O(K²) hazard; same discipline as with_pyx_posterior).
-    Bit-identical values — same operations in the same order."""
+    The shifted array and its row sum are materialised as their own
+    columns, so the fold evaluates once per row instead of once per
+    ELEMENT (the interpreted-HOF O(K²) hazard; same discipline as
+    with_pyx_posterior)."""
     t = _arr(thresholds)
     t_max = float(max(thresholds))
     shifted = F.zip_with(

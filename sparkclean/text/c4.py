@@ -1,5 +1,5 @@
-"""C4-style line-level cleaning — Catalyst + SQL twins plus an Arrow
-production kernel.
+"""C4-style line-level cleaning — an Arrow kernel with a DuckDB SQL
+twin.
 
 Implements the heuristic cleaning stage of C4 (Raffel et al. 2020,
 "Exploring the Limits of Transfer Learning with a Unified Text-to-Text
@@ -29,13 +29,9 @@ Page level (``keep`` is true only if ALL hold):
 Output per document: the cleaned text (kept lines joined with ``\\n``),
 kept-line count, sentence-terminator count, and the keep flag.
 
-Scale shape: the production path is ONE Arrow pandas UDF pass — no
-shuffle, no join, partitioning inherited from the scan (same plan shape
-as gopher; plan-asserted).  The Catalyst twin is a single projection
-with one ``filter()`` higher-order function over the split lines —
-per-element work is O(line length) on a handful of lines per document,
-nowhere near the interpreted-HOF hazards documented in CLAUDE.md (no
-array-valued subexpression is referenced per element).
+Scale shape: ONE Arrow pandas UDF pass — no shuffle, no join,
+partitioning inherited from the scan (same plan shape as gopher;
+plan-asserted).
 
 Reference behaviour note: cleanlab has no line-cleaning operator; this
 module belongs to the engine-specific text-analysis additions
@@ -65,39 +61,13 @@ MIN_SENTENCES = 3
 TERMINALS = (".", "!", "?", '"')
 
 
-# ------------------------------------------------------------ Catalyst
-
-def _keep_line(x: Column) -> Column:
-    words = F.when(F.trim(x) == "", F.array().cast("array<string>")).otherwise(
-        F.split(F.trim(x), r"\s+")
-    )
-    return (
-        F.substring(x, -1, 1).isin(*TERMINALS)
-        & (F.size(words) >= MIN_WORDS_PER_LINE)
-        & ~F.contains(ascii_lower_col(x), F.lit("javascript"))
-    )
-
-
 def c4_line_clean(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    use_arrow: bool = True,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, cleaned, n_lines_kept, n_sentences, keep) per input row.
     Null text cleans to the empty string and is dropped (0 sentences)."""
-    if use_arrow:
-        feat = with_c4_clean(df, text_col, "_c4")
-        cleaned = F.col("_c4.cleaned")
-        n_kept = F.col("_c4.n_lines_kept")
-    else:
-        base = df.withColumn(
-            "_c4_lines",
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n", -1),
-        ).withColumn("_c4_kept", F.filter(F.col("_c4_lines"), _keep_line))
-        feat = base
-        cleaned = F.array_join(F.col("_c4_kept"), "\n")
-        n_kept = F.size(F.col("_c4_kept"))
+    feat = with_c4_clean(df, text_col, "_c4")
+    cleaned = F.col("_c4.cleaned")
     n_sent = (F.size(F.split(cleaned, r"[.!?]", -1)) - 1).cast("long")
     raw_lower = ascii_lower_col(F.coalesce(F.col(text_col), F.lit("")))
     page_ok = (
@@ -110,7 +80,7 @@ def c4_line_clean(
     return feat.select(
         id_col,
         cleaned.alias("cleaned"),
-        n_kept.cast("long").alias("n_lines_kept"),
+        F.col("_c4.n_lines_kept").cast("long").alias("n_lines_kept"),
         n_sent.alias("n_sentences"),
         page_ok.alias("keep"),
     )
@@ -351,8 +321,8 @@ _TERM_SET = frozenset(TERMINALS)
 
 
 def c4_clean_py(text: str | None) -> tuple[str, int]:
-    """(cleaned, n_lines_kept) for ONE document — value-identical to the
-    Catalyst and DuckDB routes."""
+    """(cleaned, n_lines_kept) for ONE document — the kernel behind
+    :func:`with_c4_clean`, value-identical to the DuckDB twin."""
     if text is None:
         text = ""
     kept = [

@@ -32,7 +32,7 @@ import pandas as pd
 
 from ..constants import CONFIDENT_THRESHOLDS_LOWER_BOUND
 from .ppl import FALLBACK_LOGP, LOGP_MAX, LOGP_MIN, RES
-from .shared import ascii_lower_py, ENGLISH_STOPWORDS, LANG_MARKERS, LANG_ORDER
+from .shared import ascii_lower_py, ENGLISH_STOPWORDS, LANG_MARKERS, LANG_ORDER, trim_memo
 
 _STOPSET = frozenset(ENGLISH_STOPWORDS)
 _LANG_SETS = [frozenset(LANG_MARKERS[lang]) for lang in LANG_ORDER]
@@ -51,7 +51,7 @@ CAPTION_NAMES = frozenset(f.split(" ", 1)[0] for f in CAPTION_FIELDS.split(", ")
 
 #: cross-batch memo for the hashed-bigram log-prob table: natural-language
 #: bigrams repeat heavily, so each worker amortises the md5 cost to the
-#: first occurrence.  Bounded: cleared when it exceeds ~1M entries.
+#: first occurrence.  Bounded at ~1M entries by shared.trim_memo.
 _LOGP_MEMO: dict[str, float] = {}
 _LOGP_MEMO_MAX = 1_000_000
 _LOGP_SPAN = LOGP_MAX - LOGP_MIN
@@ -64,8 +64,6 @@ def _logp(bigram: str) -> float:
 
 def _logp_for_unique(uniq: np.ndarray) -> np.ndarray:
     """md5-hash only the bigrams this worker has never seen."""
-    if len(_LOGP_MEMO) > _LOGP_MEMO_MAX:
-        _LOGP_MEMO.clear()
     out = np.empty(len(uniq))
     for i, g in enumerate(uniq):
         v = _LOGP_MEMO.get(g)
@@ -73,6 +71,7 @@ def _logp_for_unique(uniq: np.ndarray) -> np.ndarray:
             v = _logp(g)
             _LOGP_MEMO[g] = v
         out[i] = v
+    trim_memo(_LOGP_MEMO, _LOGP_MEMO_MAX)
     return out
 
 

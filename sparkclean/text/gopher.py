@@ -1,5 +1,5 @@
-"""Gopher-style repetition quality signals — Catalyst + SQL twins plus
-an Arrow production kernel.
+"""Gopher-style repetition quality signals — an Arrow kernel with a
+DuckDB SQL twin.
 
 Implements the repetition-removal family from Rae et al. 2021 ("Scaling
 Language Models: Methods, Analysis & Insights from Training Gopher",
@@ -9,7 +9,7 @@ such as FineWeb / Dolma / DataTrove:
 * ``dup_line_frac`` / ``dup_para_frac`` — fraction of line (paragraph)
   occurrences beyond the first duplicate occurrence, over the line
   (paragraph) count.  Lines split on ``\\n``, paragraphs on ``\\n\\n``
-  (literal, greedy-left in all three engines).
+  (literal, greedy-left in the kernel and the SQL twin).
 * ``dup_line_char_frac`` / ``dup_para_char_frac`` — characters in those
   repeated occurrences, over ``length(text)``.
 * ``top_{2,3,4}gram_char_frac`` — characters covered by ALL occurrences
@@ -26,21 +26,15 @@ such as FineWeb / Dolma / DataTrove:
   repetition, and is capped at 1.0.
 * ``keep`` — AND of the published Gopher thresholds (Table A1).
 
-Words come from the engine-exact tokenizer triple
-(:mod:`sparkclean.text.shared` ``words_col/words_sql/words_py``); grams
-are the single-space join of ``n`` consecutive words, so
+Words come from the engine-exact tokenizer pair
+(:mod:`sparkclean.text.shared` ``words_py/words_sql``); grams are the
+single-space join of ``n`` consecutive words, so
 ``chars(gram) = sum(len(word)) + n - 1``.
 
-Scale shape: the production path is ONE Arrow pandas UDF computing all
-13 fractions per document in a single pass (no shuffle, no join — the
-per-doc counters are bounded by document length).  The Catalyst route
-(``use_arrow=False``, kept for oracle parity like simhash/winnow)
-explodes tagged (n, gram) rows — ~9 rows per word position — and
-re-aggregates per document: every shuffle is keyed by doc id with
-map-side partial aggregation, so it also scales, just with a wider
-intermediate.  Both explodes are ``explode_outer`` + a null filter on
-the generator output to dodge the InferFiltersFromGenerate re-inlining
-hazard pinned in tests/test_winnow.py.
+Scale shape: ONE Arrow pandas UDF computes all 13 fractions per
+document in a single pass (no shuffle, no join — the per-doc counters
+are bounded by document length).  :func:`gopher_features_py` is the
+per-document scalar reference the batch kernel is tested against.
 
 Reference behaviour note: cleanlab has no repetition-filter operator;
 this module belongs to the engine-specific text-analysis additions
@@ -52,11 +46,11 @@ from __future__ import annotations
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .shared import words_col, words_py, words_sql
+from .shared import words_py, words_sql
 
 TOP_NS = (2, 3, 4)
 DUP_NS = (5, 6, 7, 8, 9, 10)
@@ -81,180 +75,14 @@ GOPHER_THRESHOLDS: dict[str, float] = {
 FEATURES = list(GOPHER_THRESHOLDS)  # canonical output column order
 
 
-# ------------------------------------------------------------ Catalyst
-
-def _gram_struct_factory(ws: Column, n: int):
-    """Factory, NOT a defaulted-param lambda: pyspark treats a defaulted
-    second parameter as the (element, index) HOF signature and silently
-    binds the INDEX to it (CLAUDE.md round-3 pitfall)."""
-
-    def _g(i: Column) -> Column:
-        return F.struct(
-            F.lit(n).alias("n"),
-            F.array_join(F.slice(ws, i, n), " ").alias("gram"),
-        )
-
-    return _g
-
-
-def _tagged_ngrams(ws: Column) -> Column:
-    """array<struct<n:int,gram:string>> — every word n-gram for every n
-    in TOP_NS + DUP_NS, tagged with its n.  ``ws`` must be a materialised
-    array column (referenced n times per element)."""
-    empty = F.array().cast("array<struct<n:int,gram:string>>")
-    parts = []
-    for n in TOP_NS + DUP_NS:
-        m = F.size(ws) - (n - 1)
-        parts.append(
-            F.when(
-                m >= 1,
-                F.transform(F.sequence(F.lit(1), m), _gram_struct_factory(ws, n)),
-            ).otherwise(empty)
-        )
-    return F.flatten(F.array(*parts))
-
-
-def _exploded_unit_counts(
-    base: DataFrame, unit: Column, id_col: str
-) -> DataFrame:
-    """(id, _gp_total, _u, _c) occurrence counts of an exploded string
-    unit (line or paragraph).  explode_outer + null filter on the
-    generator OUTPUT (InferFiltersFromGenerate hazard)."""
-    return (
-        base.select(id_col, "_gp_total", F.explode_outer(unit).alias("_u"))
-        .where(F.col("_u").isNotNull())
-        .groupBy(id_col, "_gp_total", "_u")
-        .agg(F.count("*").alias("_c"))
-    )
-
-
-def _unit_features(counts: DataFrame, id_col: str, prefix: str) -> DataFrame:
-    """(id, {prefix}_frac, {prefix}_char_frac) from unit counts —
-    repeated occurrences beyond the first, over unit count / text chars."""
-    return counts.groupBy(id_col).agg(
-        (
-            F.sum(F.when(F.col("_c") > 1, F.col("_c") - 1).otherwise(0))
-            / F.sum("_c")
-        ).alias(f"{prefix}_frac"),
-        F.least(
-            F.lit(1.0),
-            F.sum(
-                F.when(
-                    F.col("_c") > 1, (F.col("_c") - 1) * F.length("_u")
-                ).otherwise(0)
-            ).cast("double")
-            / F.first("_gp_total"),
-        ).alias(f"{prefix}_char_frac"),
-    )
-
-
 def gopher_repetition(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    use_arrow: bool = True,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """One row per input row: the 13 repetition fractions (6-dp rounded)
-    plus the ``keep`` flag.  Null text yields all-zero fractions (keep).
-
-    ``use_arrow=True`` (default, production) computes everything in one
-    Arrow pandas UDF pass; ``use_arrow=False`` is the pure-Catalyst twin
-    (explode + per-doc re-aggregation) kept for oracle parity."""
-    if use_arrow:
-        feat = with_gopher_features(df, text_col, "_gp")
-        cols = {k: F.col(f"_gp.{k}") for k in FEATURES}
-    else:
-        base = (
-            df.select(id_col, text_col)
-            .withColumn(
-                "_gp_total", F.greatest(F.length(text_col), F.lit(1)).cast("long")
-            )
-            .withColumn(
-                "_gp_ws",
-                F.coalesce(
-                    words_col(F.col(text_col)), F.array().cast("array<string>")
-                ),
-            )
-        )
-        ng = (
-            base.select(
-                id_col,
-                "_gp_total",
-                F.explode_outer(_tagged_ngrams(F.col("_gp_ws"))).alias("_g"),
-            )
-            .where(F.col("_g").isNotNull())
-            .groupBy(
-                id_col,
-                "_gp_total",
-                F.col("_g.n").alias("_n"),
-                F.col("_g.gram").alias("_gram"),
-            )
-            .agg(F.count("*").alias("_c"))
-            .withColumn("_len", F.length("_gram").cast("long"))
-        )
-        per_n = ng.groupBy(id_col, "_gp_total", "_n").agg(
-            F.max(F.struct(F.col("_c").alias("c"), F.col("_len").alias("l"))).alias(
-                "_top"
-            ),
-            F.sum(
-                F.when(F.col("_c") > 1, (F.col("_c") - 1) * F.col("_len")).otherwise(
-                    0
-                )
-            ).alias("_dupchars"),
-        )
-        # coalesce BEFORE least: Spark/DuckDB least() IGNORES nulls, so
-        # least(1.0, null/total) would yield 1.0 (not 0) for a document
-        # with fewer than n words
-        ngf = per_n.groupBy(id_col).agg(
-            *[
-                F.least(
-                    F.lit(1.0),
-                    F.coalesce(
-                        F.max(
-                            F.when(
-                                F.col("_n") == n,
-                                F.col("_top.c") * F.col("_top.l"),
-                            )
-                        ),
-                        F.lit(0),
-                    ).cast("double")
-                    / F.first("_gp_total"),
-                ).alias(f"top_{n}gram_char_frac")
-                for n in TOP_NS
-            ],
-            *[
-                F.least(
-                    F.lit(1.0),
-                    F.coalesce(
-                        F.max(F.when(F.col("_n") == n, F.col("_dupchars"))),
-                        F.lit(0),
-                    ).cast("double")
-                    / F.first("_gp_total"),
-                ).alias(f"dup_{n}gram_char_frac")
-                for n in DUP_NS
-            ],
-        )
-        lf = _unit_features(
-            _exploded_unit_counts(
-                base, F.split(F.col(text_col), "\n", -1), id_col
-            ),
-            id_col,
-            "dup_line",
-        )
-        pf = _unit_features(
-            _exploded_unit_counts(
-                base, F.split(F.col(text_col), "\n\n", -1), id_col
-            ),
-            id_col,
-            "dup_para",
-        )
-        feat = (
-            base.select(id_col)
-            .join(lf, id_col, "left")
-            .join(pf, id_col, "left")
-            .join(ngf, id_col, "left")
-        )
-        cols = {k: F.coalesce(F.col(k), F.lit(0.0)) for k in FEATURES}
+    plus the ``keep`` flag, from one Arrow pandas UDF pass.  Null text
+    yields all-zero fractions (keep)."""
+    feat = with_gopher_features(df, text_col, "_gp")
+    cols = {k: F.col(f"_gp.{k}") for k in FEATURES}
     keep = None
     for k, thr in GOPHER_THRESHOLDS.items():
         cond = cols[k] <= F.lit(thr)
@@ -342,9 +170,9 @@ LEFT JOIN ngf ON ngf.id = base.id
 # ------------------------------------------------- Arrow production path
 
 def gopher_features_py(text: str | None) -> dict[str, float]:
-    """Python twin for ONE document — value-identical to the Catalyst
-    and DuckDB routes (same tokenizer, same (count, chars) tie order,
-    same integer numerators divided as doubles)."""
+    """Python reference for ONE document — value-identical to the batch
+    kernel and the DuckDB twin (same tokenizer, same (count, chars) tie
+    order, same integer numerators divided as doubles)."""
     feats = dict.fromkeys(FEATURES, 0.0)
     if text is None:
         return feats

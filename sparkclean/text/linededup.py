@@ -7,14 +7,10 @@ FIRST occurrence of each exact line and preserving the order of the
 survivors.  Output per document: the rewritten text (kept lines joined
 with ``\\n``) and the number of lines removed.
 
-Scale shape: entirely row-local — one Arrow batch pass in production
-(dict-based first-occurrence scan, O(lines) per doc), zero exchanges,
-partitioning inherited from the scan (plan-asserted).  The Catalyst
-twin uses the indexed ``filter`` HOF with ``array_position`` (first
-index) over the materialised line array — O(lines^2) per document, so
-it is the small-data/oracle route only, exactly like the gopher
-Catalyst twin; the DuckDB twin mirrors it with ``list_position`` and
-DuckDB's indexed lambda.
+Scale shape: entirely row-local — one Arrow batch pass (set-based
+first-occurrence scan, O(lines) per doc), zero exchanges, partitioning
+inherited from the scan (plan-asserted).  The DuckDB twin keeps a line
+when ``list_position`` (its first index) equals its own index.
 
 cleanlab has no rewrite operators; this module belongs to the
 engine-specific text additions (SURVEY.md §2.12) next to c4/gopher.
@@ -30,8 +26,8 @@ from pyspark.sql.functions import pandas_udf
 
 def dedup_lines_py(text: str | None) -> tuple[str, int]:
     """(deduped, n_lines_removed) for ONE document — value-identical to
-    the Catalyst and DuckDB routes.  Empty lines deduplicate like any
-    other exact line (documented choice; recipes differ here)."""
+    the DuckDB twin.  Empty lines deduplicate like any other exact line
+    (documented choice; recipes differ here)."""
     lines = (text or "").split("\n")
     seen: set[str] = set()
     kept: list[str] = []
@@ -43,38 +39,18 @@ def dedup_lines_py(text: str | None) -> tuple[str, int]:
 
 
 def dedup_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    use_arrow: bool = True,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, deduped_text, n_lines_removed) for every input row; null
     text rewrites to the empty string with zero removals."""
-    if use_arrow:
 
-        @pandas_udf("struct<deduped_text: string, n_lines_removed: long>")
-        def _dedup(texts: pd.Series) -> pd.DataFrame:
-            rows = [dedup_lines_py(t) for t in texts]
-            return pd.DataFrame(rows, columns=["deduped_text", "n_lines_removed"])
+    @pandas_udf("struct<deduped_text: string, n_lines_removed: long>")
+    def _dedup(texts: pd.Series) -> pd.DataFrame:
+        rows = [dedup_lines_py(t) for t in texts]
+        return pd.DataFrame(rows, columns=["deduped_text", "n_lines_removed"])
 
-        return df.select(
-            id_col, _dedup(F.col(text_col)).alias("_dl")
-        ).select(id_col, "_dl.deduped_text", "_dl.n_lines_removed")
-
-    base = df.withColumn(
-        "_dl_lines",
-        F.split(F.coalesce(F.col(text_col), F.lit("")), "\n", -1),
-    )
-    kept = F.filter(
-        F.col("_dl_lines"),
-        lambda x, i: F.array_position(F.col("_dl_lines"), x) == i + 1,
-    )
-    return base.select(
-        id_col,
-        F.array_join(kept, "\n").alias("deduped_text"),
-        (F.size("_dl_lines") - F.size(kept)).cast("long").alias(
-            "n_lines_removed"
-        ),
+    return df.select(id_col, _dedup(F.col(text_col)).alias("_dl")).select(
+        id_col, "_dl.deduped_text", "_dl.n_lines_removed"
     )
 
 

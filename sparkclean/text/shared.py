@@ -109,6 +109,7 @@ def words_sql(text: str) -> str:
 
 
 import re as _re  # noqa: E402
+from itertools import islice as _islice  # noqa: E402
 
 #: Java \s == ASCII [ \t\n\x0B\f\r]; Python re.ASCII \s is the same set.
 _WS_ASCII = _re.compile(r"\s+", _re.ASCII)
@@ -129,6 +130,19 @@ def words_py(text: str) -> list[str]:
     if t == "":
         return []
     return _WS_ASCII.split(t)
+
+
+def trim_memo(memo: dict, cap: int) -> None:
+    """Bound a cross-batch kernel memo at ``cap`` entries.  Past the cap,
+    drop the oldest entries in insertion order (down to 3/4 of the cap,
+    so trimming runs once per ~cap/4 misses) and keep the newer ones —
+    a hot working set survives, where ``clear()`` dropped it whole.
+    Callers read the memo with a plain ``dict.get`` and call this only
+    after inserting."""
+    excess = len(memo) - cap
+    if excess > 0:
+        for k in list(_islice(memo, excess + cap // 4)):
+            del memo[k]
 
 
 def sql_str_list(items: list[str]) -> str:

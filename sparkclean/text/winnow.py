@@ -1,5 +1,5 @@
-"""Winnowing document fingerprints (MOSS-style) — Catalyst + SQL twins
-plus a vectorised NumPy/Arrow production kernel.
+"""Winnowing document fingerprints (MOSS-style) — a vectorised
+NumPy/Arrow kernel with a DuckDB SQL twin.
 
 Algorithm (Schleimer, Wilkerson, Aiken — "Winnowing: Local Algorithms
 for Document Fingerprinting", SIGMOD 2003; public):
@@ -7,13 +7,13 @@ for Document Fingerprinting", SIGMOD 2003; public):
 1. normalise: lowercase, drop every char outside ``[a-z0-9]``;
 2. hash every char ``K``-gram with a fixed polynomial
    ``sum(code_j * B^(K-1-j)) mod P`` (all terms positive and < 2^63, so
-   the SAME left-associated integer expression runs overflow-safe on
-   the JVM and under DuckDB's ANSI overflow checking);
+   the SAME left-associated integer expression is overflow-safe in
+   NumPy int64 and under DuckDB's overflow checking);
 3. slide a window of ``W`` consecutive k-gram hashes and keep the
    window minimum.  The selected *set of hash values* is independent of
    the tie-break rule (any min of a window is some window's reported
    min), so the distinct-value output needs no rightmost-tie logic and
-   both engines agree exactly;
+   the kernel and the SQL twin agree exactly;
 4. a document's fingerprint set = sorted distinct selected hashes.
 
 Guarantee (the reason winnowing beats "every k-gram"): any shared
@@ -40,7 +40,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -52,100 +52,25 @@ _P = 1_000_000_007
 # < 2.7e12: comfortably inside signed 64-bit on both engines.
 _COEF = [_B ** (WINNOW_K - 1 - j) for j in range(WINNOW_K)]
 
-# ------------------------------------------------------------ Catalyst
-
-def norm_col(text: Column) -> Column:
-    """Lowercased text with every non-[a-z0-9] char removed."""
-    return F.regexp_replace(F.lower(text), "[^a-z0-9]", "")
-
 
 def norm_sql(text: str) -> str:
+    """Lowercased text with every non-[a-z0-9] char removed."""
     return f"regexp_replace(lower({text}), '[^a-z0-9]', '', 'g')"
 
 
-def codes_from_norm(norm: Column) -> Column:
-    """array<int> of char codes from a MATERIALISED norm column (the
-    column must be its own projection: the lambda references it once per
-    element, and an inlined regexp_replace would re-run per char)."""
-    return F.transform(F.split(norm, ""), lambda c: F.ascii(c))
-
-
-def kgram_hashes_from_codes(cs: Column) -> Column:
-    """array<long> polynomial hashes of every char K-gram.  ``cs`` must
-    be a materialised array column (referenced K times per element)."""
-    m = F.size(cs) - (WINNOW_K - 1)
-
-    def _h(i: Column) -> Column:
-        acc = None
-        for j, coef in enumerate(_COEF):
-            term = F.element_at(cs, i + j).cast("long") * F.lit(coef).cast("long")
-            acc = term if acc is None else acc + term
-        return acc % F.lit(_P).cast("long")
-
-    return F.when(m >= 1, F.transform(F.sequence(F.lit(1), m), _h)).otherwise(
-        F.array().cast("array<bigint>")
-    )
-
-
-def winnow_from_hashes(hs: Column) -> Column:
-    """Sorted distinct window minima (array<long>) from a MATERIALISED
-    k-gram hash column.  m hashes yield max(m - W + 1, 1) windows; the
-    trailing short window of a 1 <= m < W document is the whole array."""
-    m = F.size(hs)
-    nw = F.greatest(m - (WINNOW_W - 1), F.lit(1))
-    mins = F.transform(
-        F.sequence(F.lit(1), nw), lambda p: F.array_min(F.slice(hs, p, WINNOW_W))
-    )
-    return F.when(m >= 1, F.array_sort(F.array_distinct(mins))).otherwise(
-        F.array().cast("array<bigint>")
-    )
-
-
 def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    use_arrow: bool = True,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, fp) — one row per distinct selected fingerprint per document.
     Documents whose normalised text is shorter than K chars emit no rows.
 
-    ``use_arrow=True`` (default, and the production path) computes the
-    fingerprint arrays in the vectorised batch kernel — one Arrow
-    transfer per batch instead of ~10 interpreted-HOF ops per char; the
-    Catalyst route (``use_arrow=False``) is the pure-JVM twin kept for
-    oracle-parity tests, same pattern as dedup.simhash.  Both are
-    value-identical (test-pinned) on ASCII-lowerable text such as the
-    gate corpus.
-
-    Each intermediate (norm / codes / hashes) is materialised as its own
-    projection and referenced more than once downstream, so Catalyst's
-    CollapseProject keeps them as attributes instead of re-inlining the
-    producing expression into per-element lambdas (the O(n^2)
-    interpreted-HOF hazard — see dedup.minhash.shingles_from_words).
-
-    The explode is ``explode_outer`` + a null filter on the generator
-    OUTPUT, deliberately: a plain ``explode`` makes
-    InferFiltersFromGenerate add ``size(_wn_fps) > 0`` below the
-    Generate, and predicate pushdown then re-inlines the ENTIRE
-    norm→codes→hashes→minima chain into that one Filter expression with
-    no materialised attributes — nested interpreted HOFs re-evaluating
-    their array inputs per element, measured as a >100 s hang on 50
-    small documents.  A filter on ``fp`` cannot be pushed below the
-    Generate, so the layered projections survive."""
-    if use_arrow:
-        fps = with_winnow_fps(df, text_col, "_wn_fps")
-        return fps.select(
-            F.col(id_col).alias("id"), F.explode_outer("_wn_fps").alias("fp")
-        ).where(F.col("fp").isNotNull())
-    base = (
-        df.withColumn("_wn_norm", norm_col(F.col(text_col)))
-        .where(F.length("_wn_norm") >= WINNOW_K)
-        .withColumn("_wn_cs", codes_from_norm(F.col("_wn_norm")))
-        .withColumn("_wn_hs", kgram_hashes_from_codes(F.col("_wn_cs")))
-        .withColumn("_wn_fps", winnow_from_hashes(F.col("_wn_hs")))
-    )
-    return base.select(
+    The fingerprint arrays come from the vectorised batch kernel
+    (:func:`with_winnow_fps`) — one Arrow transfer per batch.  The
+    explode is ``explode_outer`` + a null filter on the generator
+    OUTPUT, so the optimiser infers no ``size() > 0`` filter to push
+    below the Generate."""
+    fps = with_winnow_fps(df, text_col, "_wn_fps")
+    return fps.select(
         F.col(id_col).alias("id"), F.explode_outer("_wn_fps").alias("fp")
     ).where(F.col("fp").isNotNull())
 
@@ -185,7 +110,6 @@ def winnow_near_duplicates(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     max_df: int = 20,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, winnow_jaccard) for pairs whose retained-fingerprint
     Jaccard >= threshold.
@@ -200,7 +124,7 @@ def winnow_near_duplicates(
     (sizes + both join sides), so it is persisted — the shrink-first-
     then-persist-the-small-result rule; the wide fps chain upstream is
     evaluated once."""
-    fps = winnow_fingerprints(df, text_col, id_col, use_arrow=use_arrow)
+    fps = winnow_fingerprints(df, text_col, id_col)
     # Document frequency per fingerprint; anti-join the hot set away.
     # NO explicit broadcast hint: the hot set is tiny on curated corpora
     # (AQE broadcasts it) but is NOT guaranteed driver-sized at 10^12
@@ -270,7 +194,6 @@ def winnow_near_duplicate_clusters(
     threshold: float = 0.5,
     max_df: int = 20,
     max_iter: int = 20,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Keep-one-per-cluster over the winnow pair graph — fourth modality
     on the shared pointer-jumping component primitive
@@ -279,9 +202,7 @@ def winnow_near_duplicate_clusters(
     cluster_size)`` for every input row, singletons at size 1."""
     from ..graph import components_from_pairs
 
-    pairs = winnow_near_duplicates(
-        df, text_col, id_col, threshold, max_df, use_arrow=use_arrow
-    )
+    pairs = winnow_near_duplicates(df, text_col, id_col, threshold, max_df)
     out = components_from_pairs(
         pairs, df.select(F.col(id_col).alias("id")), max_iter=max_iter
     )
@@ -311,8 +232,9 @@ _SENTINEL = _P + 1  # > any real hash; masks padded positions in the min
 
 
 def winnow_fps_py(text: str | None) -> list[int]:
-    """Python/NumPy twin of the Catalyst builder for ONE document —
-    value-identical on ASCII-lowerable input (test-pinned)."""
+    """Python/NumPy reference for ONE document — value-identical to the
+    batch kernel and the DuckDB twin (test-pinned), and the batch
+    kernel's route for rows longer than ``_BATCH_PAD_CAP``."""
     if text is None:
         return []
     norm = _NORM_RE.sub("", text.lower())

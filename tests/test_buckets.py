@@ -1,7 +1,10 @@
-"""assign_aspect_buckets: frozen-enumeration properties, NumPy-oracle
-agreement, degenerate rows, and the row-local (no-exchange) plan."""
+"""assign_aspect_buckets: frozen-enumeration properties, exact-rational
+and DuckDB-twin agreement, degenerate rows, and the row-local
+(no-exchange) plan."""
 
 from fractions import Fraction
+
+import duckdb
 
 from sparkclean.images import buckets as B
 
@@ -38,27 +41,34 @@ def test_bucket_enumeration_is_frozen_and_sane():
 
 def test_assignment_matches_exact_rational_argmin(spark):
     df = spark.createDataFrame(IMAGES, "image_id: long, w: int, h: int")
-    for use_arrow in (True, False):
-        got = {
-            r["image_id"]: (r["bucket_id"], r["bucket_w"], r["bucket_h"])
-            for r in B.assign_aspect_buckets(df, use_arrow=use_arrow).collect()
-        }
-        assert len(got) == len(IMAGES)
-        for iid, w, h in IMAGES:
-            if not w or not h:
-                assert got[iid] == (-1, None, None)
-                continue
-            want = _serial_assign(w, h)
-            assert got[iid] == (want, *B.BUCKETS[want]), (iid, w, h, use_arrow)
-        # spot-check semantics: exact-aspect inputs land on that aspect
-        assert (got[2][1], got[2][2]) == (2048, 512)
-        assert (got[3][1], got[3][2]) == (512, 2048)
+    got = {
+        r["image_id"]: (r["bucket_id"], r["bucket_w"], r["bucket_h"])
+        for r in B.assign_aspect_buckets(df).collect()
+    }
+    assert len(got) == len(IMAGES)
+    for iid, w, h in IMAGES:
+        if not w or not h:
+            assert got[iid] == (-1, None, None)
+            continue
+        want = _serial_assign(w, h)
+        assert got[iid] == (want, *B.BUCKETS[want]), (iid, w, h)
+    # spot-check semantics: exact-aspect inputs land on that aspect
+    assert (got[2][1], got[2][2]) == (2048, 512)
+    assert (got[3][1], got[3][2]) == (512, 2048)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE images (image_id BIGINT, w INTEGER, h INTEGER)")
+    con.executemany("INSERT INTO images VALUES (?, ?, ?)", IMAGES)
+    twin = {
+        r[0]: tuple(r[3:])
+        for r in con.sql(B.assign_aspect_buckets_sql("images")).fetchall()
+    }
+    assert twin == got
 
 
 def test_production_plan_is_one_arrow_stage_no_shuffle(spark):
     df = spark.createDataFrame(IMAGES, "image_id: long, w: int, h: int")
     plan = (
-        B.assign_aspect_buckets(df, use_arrow=True)
+        B.assign_aspect_buckets(df)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -59,12 +59,11 @@ def _oracle_rows():
 
 def test_spark_matches_duckdb(spark):
     want = _oracle_rows()
-    for use_arrow in (True, False):
-        got = {
-            r["doc_id"]: tuple(r)[1:]
-            for r in C.c4_line_clean(_docs_df(spark), use_arrow=use_arrow).collect()
-        }
-        assert got == want, f"use_arrow={use_arrow}"
+    got = {
+        r["doc_id"]: tuple(r)[1:]
+        for r in C.c4_line_clean(_docs_df(spark)).collect()
+    }
+    assert got == want
 
 
 def test_python_kernel_matches_oracle():
@@ -198,20 +197,13 @@ def test_document_quality_report(spark):
 def test_plan_shape(spark):
     df = _docs_df(spark)
     arrow = (
-        C.c4_line_clean(df, use_arrow=True)
+        C.c4_line_clean(df)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert arrow.count("ArrowEvalPython") == 1
     assert "Exchange" not in arrow
-    native = (
-        C.c4_line_clean(df, use_arrow=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in native and "ArrowEvalPython" not in native
     span = (
         C.c4_span_dedup(spark.createDataFrame(SPAN_DOCS, "doc_id: long, text: string"))
         ._jdf.queryExecution()

@@ -83,12 +83,7 @@ def test_simhash_pairs(spark, dup_docs):
     # a one-word change moves the fingerprint but stays closer than an
     # unrelated doc (compare raw hamming distances, not candidacy —
     # 13-token docs flip several of 32 bits per token change)
-    sh = {
-        r["doc_id"]: r["sh"]
-        for r in dup_docs.select(
-            "doc_id", d_simhash.simhash_col(F.col("text")).alias("sh")
-        ).collect()
-    }
+    sh = {r["doc_id"]: r["sh"] for r in fps.collect()}
     ham = lambda a, b: bin((sh[a] ^ sh[b]) & 0xFFFFFFFF).count("1")
     assert ham(100, 110) < ham(100, 120)
 
@@ -123,19 +118,15 @@ def test_simhash_block_bits_knob(spark, dup_docs):
 
 def test_simhash_null_text(spark):
     """Null text rows must flow through the Arrow kernel as simhash 0 —
-    the value the Catalyst fold produces (each bit's NULL vote falls
-    into the when().otherwise(0) branch) and the SQL twin's CASE
-    mirrors — instead of raising TypeError.  All three paths must agree
-    so null-text corpora hash identically at the gate."""
+    the value the SQL twin's CASE produces (a NULL vote falls into the
+    ELSE 0 branch) — instead of raising TypeError, so null-text corpora
+    hash identically at the gate."""
     df = spark.createDataFrame(
         [(1, "the quick brown fox"), (2, None), (3, "the quick brown fox"), (4, "")],
         "doc_id: long, text: string",
     )
     sh = {r["doc_id"]: r["sh"] for r in
           d_simhash.with_simhash(df, "text", "sh").collect()}
-    fold = {r["doc_id"]: r["sh"] for r in
-            df.select("doc_id", d_simhash.simhash_col(F.col("text")).alias("sh")).collect()}
-    assert sh == fold  # Arrow kernel == Catalyst fold, including null text
     assert sh[2] == 0 and sh[4] == 0
     assert sh[1] == sh[3] is not None
     import duckdb

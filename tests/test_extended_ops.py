@@ -233,7 +233,8 @@ def test_segmentation_softmin_tends_to_min_at_low_temperature(spark):
 def test_ngram_jaccard_exact(spark):
     from pyspark.sql import functions as F
 
-    from sparkclean.dedup.minhash import jaccard_col, shingles_col
+    from sparkclean.dedup.minhash import jaccard_col, shingles_from_words
+    from sparkclean.text.shared import ascii_lower_col, words_col
 
     df = spark.createDataFrame(
         [
@@ -243,7 +244,11 @@ def test_ngram_jaccard_exact(spark):
         ],
         "doc_id: long, text: string",
     )
-    sh = df.select("doc_id", shingles_col(F.col("text")).alias("sh"))
+    # built the way the ngram_jaccard_pairs gate builds them: materialise
+    # the words column, then shingle it
+    sh = df.withColumn("_w", words_col(ascii_lower_col(F.col("text")))).select(
+        "doc_id", shingles_from_words(F.col("_w")).alias("sh")
+    )
     a = sh.select(F.col("doc_id").alias("ia"), F.col("sh").alias("sa"))
     b = sh.select(F.col("doc_id").alias("ib"), F.col("sh").alias("sb"))
     pairs = {

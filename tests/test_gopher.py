@@ -1,4 +1,4 @@
-"""Gopher repetition filters: engine parity (Spark Catalyst + Arrow vs
+"""Gopher repetition filters: engine parity (Spark Arrow kernel vs
 DuckDB), kernel twins, threshold semantics, and plan-shape guards."""
 
 import duckdb
@@ -19,6 +19,12 @@ DOCS = [
     (7, "word word word tail"),
     (8, "  leading and trailing spaces  "),
     (9, "one\ntwo\nthree\nfour"),
+    # non-ASCII case mapping: dotted capital I, final sigma, the Kelvin
+    # sign, ligatures, fullwidth letters and the long s
+    (10, "İstanbul İSTANBUL straße STRASSE"),
+    (11, "ΣΊΣΥΦΟΣ σίσυφος Kelvin \u212a ﬁne ﬀ"),
+    (12, "Ａｂｃｄｅ ＡＢＣＤＥ abcde"),
+    (13, "ſtop ſtop long s"),
 ]
 
 
@@ -35,12 +41,11 @@ def _oracle_rows():
 
 def test_spark_matches_duckdb(spark):
     want = _oracle_rows()
-    for use_arrow in (True, False):  # production Arrow route AND Catalyst twin
-        got = {
-            r["doc_id"]: tuple(r)[1:]
-            for r in G.gopher_repetition(_docs_df(spark), use_arrow=use_arrow).collect()
-        }
-        assert got == want, f"use_arrow={use_arrow}"
+    got = {
+        r["doc_id"]: tuple(r)[1:]
+        for r in G.gopher_repetition(_docs_df(spark)).collect()
+    }
+    assert got == want
 
 
 def test_python_kernel_matches_oracle():
@@ -155,25 +160,9 @@ def test_gate_thresholds_are_gopher_table_a1():
 
 def test_plan_shape(spark):
     df = _docs_df(spark)
-    # Catalyst twin: words/line/para splits stay materialised projections
-    # (re-inlining would multiply split() into the 9 per-n lambdas)
-    plan = (
-        G.gopher_repetition(df, use_arrow=False)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert plan.count("split(") <= 3
-    assert (
-        "CartesianProduct"
-        not in G.gopher_repetition(df, use_arrow=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
     # production route: ONE Arrow stage, ZERO shuffles
     arrow = (
-        G.gopher_repetition(df, use_arrow=True)
+        G.gopher_repetition(df)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -1,5 +1,5 @@
-"""dedup_lines: three-route parity (Arrow / Catalyst / DuckDB) and the
-zero-exchange production plan."""
+"""dedup_lines: three-route parity (Arrow kernel / scalar reference /
+DuckDB) and the zero-exchange production plan."""
 
 import duckdb
 
@@ -32,13 +32,8 @@ def test_kernel_semantics():
 
 def test_three_route_parity(spark):
     df = _docs_df(spark)
-    arrow = sorted(
-        tuple(r) for r in L.dedup_lines(df, use_arrow=True).collect()
-    )
-    native = sorted(
-        tuple(r) for r in L.dedup_lines(df, use_arrow=False).collect()
-    )
-    assert arrow == native
+    arrow = sorted(tuple(r) for r in L.dedup_lines(df).collect())
+    assert arrow == sorted((i, *L.dedup_lines_py(t)) for i, t in DOCS)
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", DOCS)
@@ -50,7 +45,7 @@ def test_three_route_parity(spark):
 
 def test_production_plan_is_one_arrow_stage(spark):
     plan = (
-        L.dedup_lines(_docs_df(spark), use_arrow=True)
+        L.dedup_lines(_docs_df(spark))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -224,3 +224,44 @@ JOIN ({langid.langid_markers_query_sql("ws_captions", "i")}) l ON f.i = l.i"""
         ["i", "n_words", "repetition_ratio", "stopword_ratio", "pred_lang", "ppl"]
     ]
     compare(got, duck, sql, key="i")
+
+
+def _h60_lookup(key):
+    from sparkclean.dedup import minhash
+
+    return minhash._h60(key)
+
+
+def _logp_lookup(key):
+    from sparkclean.text import fast
+
+    return fast._logp_for_unique(np.array([key], dtype=object))[0]
+
+
+@pytest.mark.parametrize(
+    "module, memo, cap, lookup",
+    [
+        ("sparkclean.dedup.minhash", "_H60_MEMO", "_H60_MEMO_MAX", _h60_lookup),
+        ("sparkclean.text.fast", "_LOGP_MEMO", "_LOGP_MEMO_MAX", _logp_lookup),
+    ],
+)
+def test_bounded_memo_evicts_oldest_and_keeps_newest(
+    monkeypatch, module, memo, cap, lookup
+):
+    """Past its cap a kernel memo drops its OLDEST entries and keeps the
+    newer ones (a hot working set survives), instead of clearing down to
+    the one key being inserted; evicted keys recompute the same value."""
+    import importlib
+
+    mod = importlib.import_module(module)
+    n_cap, extra = 8, 3
+    monkeypatch.setattr(mod, memo, {})
+    monkeypatch.setattr(mod, cap, n_cap)
+    keys = [f"memo key {i}" for i in range(n_cap + extra)]
+    first = {k: lookup(k) for k in keys}
+    table = getattr(mod, memo)
+    assert n_cap // 2 <= len(table) <= n_cap
+    assert all(k in table for k in keys[-(n_cap // 2):])  # newest survive
+    assert keys[0] not in table  # oldest went first
+    assert lookup(keys[0]) == first[keys[0]]
+    assert len(getattr(mod, memo)) <= n_cap

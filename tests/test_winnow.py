@@ -1,6 +1,5 @@
 """Winnowing fingerprints: engine parity, kernel parity, the winnowing
-coverage guarantee, near-dup pair shape, and the InferFiltersFromGenerate
-plan regression guard."""
+coverage guarantee, near-dup pair shape, and plan-shape guards."""
 
 import duckdb
 import pytest
@@ -20,6 +19,12 @@ DOCS = [
     (6, "!!! ??? ,,,"),    # no alnum chars at all
     (7, "abcde"),          # exactly K chars -> one k-gram, one fingerprint
     (8, "abcdefg"),        # 1 <= m < W -> single min over all hashes
+    # non-ASCII case mapping: dotted capital I, final sigma, the Kelvin
+    # sign, ligatures, fullwidth letters and the long s
+    (9, "İstanbul İSTANBUL straße STRASSE"),
+    (10, "ΣΊΣΥΦΟΣ σίσυφος Kelvin \u212a ﬁne ﬀ"),
+    (11, "Ａｂｃｄｅ ＡＢＣＤＥ abcde"),
+    (12, "ſtop ſtop long s"),
 ]
 
 
@@ -27,28 +32,29 @@ def _docs_df(spark):
     return spark.createDataFrame(DOCS, "doc_id: long, text: string")
 
 
-def test_spark_matches_duckdb(spark):
+def _oracle_rows():
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE documents (doc_id BIGINT, text VARCHAR)"
     )
     con.executemany("INSERT INTO documents VALUES (?, ?)", DOCS)
-    want = {tuple(r) for r in con.sql(W.winnow_fingerprints_sql("documents")).fetchall()}
-    for use_arrow in (True, False):  # production Arrow route AND Catalyst twin
-        got = {
-            (r["id"], r["fp"])
-            for r in W.winnow_fingerprints(
-                _docs_df(spark), use_arrow=use_arrow
-            ).collect()
-        }
-        assert got == want and len(got) > 0, f"use_arrow={use_arrow}"
+    return {tuple(r) for r in con.sql(W.winnow_fingerprints_sql("documents")).fetchall()}
 
 
-def test_python_kernels_match_catalyst(spark):
-    rows = W.winnow_fingerprints(_docs_df(spark), use_arrow=False).collect()
+def test_spark_matches_duckdb(spark):
+    want = _oracle_rows()
+    got = {
+        (r["id"], r["fp"]) for r in W.winnow_fingerprints(_docs_df(spark)).collect()
+    }
+    assert got == want and len(got) > 0
+    # every non-ASCII row normalises to >= K chars and fingerprints
+    assert {9, 10, 11, 12} <= {doc_id for doc_id, _ in got}
+
+
+def test_python_kernels_match_duckdb():
     by_id = {}
-    for r in rows:
-        by_id.setdefault(r["id"], []).append(r["fp"])
+    for doc_id, fp in _oracle_rows():
+        by_id.setdefault(doc_id, []).append(fp)
     for doc_id, text in DOCS:
         want = sorted(by_id.get(doc_id, []))
         assert W.winnow_fps_py(text) == want, f"scalar kernel, doc {doc_id}"
@@ -216,18 +222,17 @@ def test_winnow_clusters_vs_union_find(spark):
 
 
 def test_plan_has_no_reinlined_chain_and_no_cartesian(spark):
-    """Guard the InferFiltersFromGenerate hazard: with a plain explode the
-    inferred size()>0 filter pushes below every projection and re-inlines
-    the whole norm->codes->hashes->minima chain (measured >100 s on 50
-    docs).  The explode_outer form keeps ONE regexp_replace per layer."""
+    """The fingerprint plan runs the batch kernel once (one Arrow stage,
+    no shuffle) and the pair plan has no all-pairs stage."""
     df = _docs_df(spark)
     plan = (
-        W.winnow_fingerprints(df, use_arrow=False)
+        W.winnow_fingerprints(df)
         ._jdf.queryExecution()
-        .optimizedPlan()
+        .executedPlan()
         .toString()
     )
-    assert plan.count("regexp_replace") <= 3
+    assert plan.count("ArrowEvalPython") == 1
+    assert "Exchange" not in plan
     pair_plan = (
         W.winnow_near_duplicates(df)
         ._jdf.queryExecution()

@@ -6,13 +6,16 @@ Usage:
     python tools/callers.py --all      # also every definition's counts
 
 A definition is a top-level ``def``/``class`` in ``sparkclean/``.  A
-reference is any ``ast.Name``/``ast.Attribute``/``from ... import`` of
-its name (matched by name, not resolved through imports), outside the
-definition's own body.  References from ``sparkclean/``,
-``__spark_entry__.py``, ``bench*.py``, ``bench/`` and ``tools/`` count
-as production callers; references from ``tests/`` and ``perfbench/``
-are counted separately.  Matching by bare name over-counts a name that
-several modules define, so the report is a lower bound on dead code.
+reference is any ``ast.Name``/``ast.Attribute`` of its name (matched by
+name, not resolved through imports), outside the definition's own
+body.  A ``from ... import`` of the name counts only inside a package
+``__init__.py``, where it is a re-export; elsewhere an import is not a
+call, and an import that is never used would otherwise hide dead code.
+References from ``sparkclean/``, ``__spark_entry__.py``, ``bench*.py``,
+``bench/`` and ``tools/`` count as production callers; references from
+``tests/`` and ``perfbench/`` are counted separately.  Matching by bare
+name over-counts a name that several modules define, so the report is a
+lower bound on dead code.
 
 The scan only prints; nothing gates on it.
 """
@@ -52,15 +55,17 @@ def _definitions(path: str) -> list[tuple[str, int, int]]:
 
 
 def _references(path: str) -> list[tuple[str, int]]:
-    """(name, line) of every name a file mentions."""
+    """(name, line) of every name a file mentions; imported names only
+    in a package ``__init__.py`` (re-exports)."""
     tree = _parse(path)
+    reexports = os.path.basename(path) == "__init__.py"
     refs = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             refs.append((node.id, node.lineno))
         elif isinstance(node, ast.Attribute):
             refs.append((node.attr, node.lineno))
-        elif isinstance(node, ast.ImportFrom):
+        elif reexports and isinstance(node, ast.ImportFrom):
             refs.extend((a.name, node.lineno) for a in node.names)
     return refs
 
