@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .constants import CONFIDENT_THRESHOLDS_LOWER_BOUND, FLOATING_POINT_COMPARISON
-from .quality.issues import bottom_n_flags
-from .quality.scores import boosted_predicted_label, predicted_label, self_confidence
+from .quality.issues import flag_bottom_n_issues, issue_counts
+from .quality.scores import self_confidence
 from .quality.thresholds import get_confident_thresholds
 from .text.ppl import ppl_hash_sql
 from .text.rules import quality_features_sql_exprs
@@ -113,13 +113,15 @@ def caption_scores(
     ``decode_scan(with_caption_features=True)``.  Returns its columns
     plus quality_score (unrounded), is_label_issue, keep, scrubbed_text.
 
-    Job structure (the 2-pass batched shape): ``labelled`` is cached,
-    pass-1 agg collects K=3 thresholds (paying the upstream scan and
-    caption stage into the persist), pass-2 agg counts issues, then the
-    exact bottom-n selection and the scrub projection.  All aggregations
-    are map-side partial; nothing wide shuffles.  Project ``labelled``
-    down to the columns the caller still needs before calling: every
-    column is cached.
+    Job structure: ``labelled`` is cached, then the steps of
+    ``quality.issues.find_label_issues_batched(thorough=False)`` run on
+    it: pass-1 agg collects K=3 thresholds (paying the upstream scan and
+    caption stage into the persist), pass-2 is ``issue_counts`` (fast
+    rule and row count in one agg), then ``flag_bottom_n_issues`` (exact
+    bottom-n, reduce-issues unflag).  This function adds only keep and
+    the scrub projection.  All aggregations are map-side partial;
+    nothing wide shuffles.  Project ``labelled`` down to the columns the
+    caller still needs before calling: every column is cached.
 
     Cache ownership: the labelled frame stays persisted for the session
     (the returned DataFrame reads it lazily — unpersisting here would
@@ -145,24 +147,11 @@ def caption_scores(
     thresholds = get_confident_thresholds(feats, NUM_CLASSES)
     if stage_times is not None:
         stage_times["pass1_scan_thresholds"] = round(_time.time() - _t0, 3)
-    t_arr = F.array(*[F.lit(float(t)) for t in thresholds])
 
-    # fast-path issue count (label_issues_batched thorough=False),
-    # fused with the row count in a single aggregation pass
-    am = predicted_label(F.col("pred_probs"))
-    confident_neq = (
-        F.array_max(F.col("pred_probs"))
-        >= F.element_at(t_arr, am + 1) - F.lit(FLOATING_POINT_COMPARISON)
-    ) & (am != F.col("label"))
     _t0 = _time.time()
-    agg_row = feats.agg(
-        F.sum(F.when(confident_neq, 1).otherwise(0)).alias("_n_issues"),
-        F.count(F.lit(1)).alias("_total"),
-    ).collect()[0]
+    n_issues, total = issue_counts(feats, thresholds, thorough=False)
     if stage_times is not None:
         stage_times["pass2_issue_count"] = round(_time.time() - _t0, 3)
-    n_issues = int(agg_row["_n_issues"] or 0)
-    total = int(agg_row["_total"])
 
     # quality_score is a one-expression derivation (element_at) over the
     # already-cached feats — derive it lazily instead of persisting a
@@ -172,12 +161,7 @@ def caption_scores(
     scored = feats.withColumn(
         "quality_score", self_confidence(F.col("label"), F.col("pred_probs"))
     )
-    flagged = bottom_n_flags(scored, n_issues, "quality_score", id_col, total=total)
-    flagged = flagged.withColumn(
-        "is_label_issue",
-        F.col("is_label_issue")
-        & ~(boosted_predicted_label(F.col("label"), F.col("pred_probs")) == F.col("label")),
-    )
+    flagged = flag_bottom_n_issues(scored, n_issues, total, "quality_score", id_col)
     return flagged.withColumn(
         "keep", (F.col("label") == 0) & ~F.col("is_label_issue")
     ).withColumn("scrubbed_text", scrub_col(F.col(text_col)))

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from . import matrix_ops
 from .cv import LOG2PI, VAR_FLOOR
 from .issues import find_label_issues
-from .joint import compute_confident_joint, label_counts
+from .joint import raw_joint_and_counts
 
 
 def class_sample_weights(nm) -> list[float]:
@@ -59,10 +59,8 @@ def fit_predict(
     )
     clean = flagged.where(~F.col("is_label_issue"))
 
-    cj = compute_confident_joint(
-        df, num_classes, label_col, probs_col, calibrate=True, thresholds=thresholds
-    )
-    counts = label_counts(df, num_classes, label_col)
+    cj_raw, counts = raw_joint_and_counts(df, num_classes, thresholds, label_col, probs_col)
+    cj = matrix_ops.calibrate_confident_joint(cj_raw, counts)
     _, nm, _ = matrix_ops.estimate_latent(cj, counts)
     weights = class_sample_weights(nm)
 

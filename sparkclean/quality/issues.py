@@ -8,10 +8,11 @@ Branch → Spark plan:
                          reduce-issues unflag (boosted argmax == label).
 * predicted_neq_given  — pure projection ``argmax(p) != label`` + reduce.
 * low_self_confidence /
-  low_normalized_margin — n = num_label_issues(off_diagonal) (distributed
-                         count), then exact bottom-n by (score, id) via a
-                         quantile-banded selection (no global single-
-                         partition sort; see :func:`bottom_n_flags`).
+  low_normalized_margin — n = the off-diagonal issue count (one fused
+                         issue-count + row-count aggregation), then exact
+                         bottom-n by (score, id) via a quantile-banded
+                         selection (no global single-partition sort; see
+                         :func:`bottom_n_flags`).
 * prune_by_class       — per-class bottom-m via Window.partitionBy(label).
 * prune_by_noise_rate  — per (given k, candidate j) top-c margins via a
                          broadcast join against the K×K prune-count matrix
@@ -23,22 +24,37 @@ Branch → Spark plan:
 
 All masks except low_* then pass the reduce-issues filter
 (filter.py:432-435).
+
+The batched dataflow (:func:`find_label_issues_batched`) is three steps:
+the thresholds (thresholds.get_confident_thresholds), then
+:func:`issue_counts` (the thorough off-diagonal rule or the fast
+:func:`fast_issue_rule`, fused with the row count in one aggregation),
+then :func:`flag_bottom_n_issues` (exact bottom-n, then the reduce-issues
+unflag).  Each is defined once, here or in thresholds.py:
+``pipeline.caption_scores`` runs the three with the fast rule, and the
+streaming scorer runs :func:`fast_issue_rule` per row.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..constants import FLOATING_POINT_COMPARISON
 from . import matrix_ops
 from .joint import (
     compute_confident_joint,
-    confident_joint_counts,
     label_counts,
+    raw_joint_and_counts,
     with_confident_bins,
 )
-from .scores import boosted_predicted_label, predicted_label, with_label_quality_scores
+from .scores import (
+    boosted_predicted_label,
+    literal_array,
+    predicted_label,
+    with_label_quality_scores,
+)
 from .thresholds import get_confident_thresholds
 
 FILTER_BY_METHODS = (
@@ -61,6 +77,45 @@ def _with_reduce_mask(df: DataFrame, label_col: str, probs_col: str) -> DataFram
     )
 
 
+def fast_issue_rule(label: Column, probs: Column, thresholds: list[float]) -> Column:
+    """The fast issue rule of label_issues_batched.py:564-673: the argmax
+    class clears its own threshold (1e-6 fuzzy) and is not the given
+    label — ``max p >= t[argmax] - 1e-6 AND argmax != label``."""
+    am = predicted_label(probs)
+    return (
+        F.array_max(probs).cast("double")
+        >= F.element_at(literal_array(thresholds), am + 1) - F.lit(FLOATING_POINT_COMPARISON)
+    ) & (am != label.cast("int"))
+
+
+def issue_counts(
+    df: DataFrame,
+    thresholds: list[float],
+    label_col: str = "label",
+    probs_col: str = "pred_probs",
+    thorough: bool = True,
+) -> tuple[int, int]:
+    """(issue count, row count) from ONE aggregation.  ``thorough`` counts
+    confidently off-diagonal rows that survive reduce-issues
+    (num_label_issues off_diagonal); otherwise :func:`fast_issue_rule`."""
+    if thorough:
+        df = _with_reduce_mask(
+            with_confident_bins(df, thresholds, probs_col), label_col, probs_col
+        )
+        rule = (
+            F.col("is_confident")
+            & (F.col("true_label_guess") != F.col(label_col).cast("int"))
+            & ~F.col("_reduce_ok")
+        )
+    else:
+        rule = fast_issue_rule(F.col(label_col), F.col(probs_col), thresholds)
+    row = df.agg(
+        F.sum(F.when(rule, 1).otherwise(0)).alias("_n"),
+        F.count(F.lit(1)).alias("_total"),
+    ).first()
+    return int(row["_n"] or 0), int(row["_total"])
+
+
 def num_label_issues(
     df: DataFrame,
     num_classes: int,
@@ -79,15 +134,7 @@ def num_label_issues(
     if estimation_method == "off_diagonal":
         if thresholds is None:
             thresholds = get_confident_thresholds(df, num_classes, label_col, probs_col)
-        binned = _with_reduce_mask(
-            with_confident_bins(df, thresholds, label_col, probs_col), label_col, probs_col
-        )
-        n = binned.where(
-            F.col("is_confident")
-            & (F.col("true_label_guess") != F.col(label_col).cast("int"))
-            & ~F.col("_reduce_ok")
-        ).count()
-        return int(n)
+        return issue_counts(df, thresholds, label_col, probs_col)[0]
     if estimation_method == "off_diagonal_calibrated":
         cj = compute_confident_joint(df, num_classes, label_col, probs_col, thresholds=thresholds)
         joint = matrix_ops.estimate_joint_from_cj(cj)
@@ -112,7 +159,8 @@ def bottom_n_flags(
     total: int | None = None,
     task_cap: int | None = None,
 ) -> DataFrame:
-    """Flag exactly the n smallest rows by (score, id) total order.
+    """Flag exactly the first n rows in (score ASC NULLS LAST, id ASC)
+    order — the SQL twins' ``row_number() OVER (...) <= n``.
 
     Scale strategy: a global single-partition window would serialise the
     whole table through one task.  Instead: (1) bound a quantile band
@@ -123,7 +171,10 @@ def bottom_n_flags(
     selection (stats._rows_at_ranks_selection) instead of a single-task
     window; (4) the result is a pure predicate — no join, no broadcast.
     At 100 TB no task ever sorts more than ~max(band/P, task_cap) rows,
-    regardless of the score distribution.
+    regardless of the score distribution.  When ``total`` fits the task
+    budget the band is every row: one rank job, no approxQuantile and no
+    band count.  When n passes the non-null scores, the band is the
+    NULL-score tail, ranked by id.
     """
     if total is None:
         total = df.count()
@@ -132,117 +183,102 @@ def bottom_n_flags(
     if n >= total:
         return df.withColumn(flag_col, F.lit(True))
 
-    frac = n / total
-    # band half-width shrinks with the data so the single-task band rank
-    # stays ≤ ~2e6 rows at ANY corpus size (see stats._adaptive_err)
     from ..stats import (
         _BAND_TARGET_ROWS,
         _adaptive_err,
         _rows_at_ranks_selection,
     )
 
-    # Small-input fast path: the band machinery exists so no task ever
-    # sorts a data-sized frame, but at total <= the task budget the band
-    # path would rank up to the same row count in one task anyway — rank
-    # the non-null scores directly and skip the approxQuantile + band-
-    # measure jobs (3 Spark jobs -> 1; identical (score, id) cutoff).
-    _fast_cap = task_cap if task_cap is not None else _BAND_TARGET_ROWS
-    if total <= _fast_cap:
-        w = Window.orderBy(F.col(score_col).asc(), F.col(id_col).asc())
-        cut = (
-            df.where(F.col(score_col).isNotNull())
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == F.lit(n))
-            .select(score_col, id_col)
-            .collect()
-        )
-        if cut:
-            s_star, id_star = cut[0][0], cut[0][1]
-            return df.withColumn(
-                flag_col,
-                F.coalesce(
-                    (F.col(score_col) < F.lit(s_star))
-                    | (
-                        (F.col(score_col) == F.lit(s_star))
-                        & (F.col(id_col) <= F.lit(id_star))
-                    ),
-                    F.lit(False),
-                ),
-            )
-        # n exceeded the non-null count — fall through to the band path
-        # (which preserves the historical behaviour for that edge)
+    score, rid = F.col(score_col), F.col(id_col)
+    cap = task_cap if task_cap is not None else _BAND_TARGET_ROWS
+    if total <= cap:
+        # the band path would rank up to this many rows in one task anyway
+        band, r, c_band = df, n, total
+    else:
+        # band half-width shrinks with the data so the single-task band
+        # rank stays ≤ ~2e6 rows at ANY corpus size (see stats._adaptive_err)
+        frac = n / total
+        err = min(0.005, _adaptive_err(total, None) * 2.5)
+        lo_q, hi_q = max(0.0, frac - 2 * err), min(1.0, frac + 2 * err)
+        # no quantiles when every score is NULL: all counts below read 0
+        # and the band becomes the NULL-score tail
+        lo, hi = df.approxQuantile(score_col, [lo_q, hi_q], err / 2) or (None, None)
 
-    err = min(0.005, _adaptive_err(total, None) * 2.5)
-    lo_q, hi_q = max(0.0, frac - 2 * err), min(1.0, frac + 2 * err)
-    lo, hi = df.approxQuantile(score_col, [lo_q, hi_q], err / 2)
+        # ONE agg measures the band's ACTUAL size along with the below-count:
+        # heavy ties at the cutoff can inflate the true band far past the
+        # 2·err·N estimate without tripping the overshoot branch at all
+        cnt = df.agg(
+            F.count(F.when(score < lo, 1)).alias("_below"),
+            F.count(F.when((score >= lo) & (score <= hi), 1)).alias("_band"),
+            F.count(score).alias("_nn"),
+        ).first()
+        c_below, c_band, c_nonnull = int(cnt["_below"]), int(cnt["_band"]), int(cnt["_nn"])
+        band_cond = (score >= F.lit(lo)) & (score <= F.lit(hi))
+        if c_below > n:
+            # quantile estimate overshot (heavy ties) — extend band downward
+            band_cond = score <= F.lit(hi)
+            c_band += c_below
+            c_below = 0
+        r = n - c_below
+        if r <= 0:
+            return df.withColumn(flag_col, F.coalesce(score < F.lit(lo), F.lit(False)))
+        if r > c_band:
+            if n > c_nonnull:
+                # the cutoff lies in the NULLS-LAST tail: every non-null
+                # score is flagged and the NULL-score rows rank by id
+                band_cond = score.isNull()
+                r, c_band = n - c_nonnull, total - c_nonnull
+            else:
+                # upper estimate undershot — extend band upward
+                band_cond = (score >= F.lit(lo)) if c_below else score.isNotNull()
+                c_band = c_nonnull - c_below
+        band = df.where(band_cond)
 
-    # ONE agg measures the band's ACTUAL size along with the below-count:
-    # heavy ties at the cutoff can inflate the true band far past the
-    # 2·err·N estimate without tripping the overshoot branch at all
-    cnt = df.agg(
-        F.count(F.when(F.col(score_col) < lo, 1)).alias("_below"),
-        F.count(
-            F.when((F.col(score_col) >= lo) & (F.col(score_col) <= hi), 1)
-        ).alias("_band"),
-        F.count(F.col(score_col)).alias("_nn"),
-    ).first()
-    c_below, c_band, c_nonnull = int(cnt["_below"]), int(cnt["_band"]), int(cnt["_nn"])
-    band_cond = (F.col(score_col) >= F.lit(lo)) & (F.col(score_col) <= F.lit(hi))
-    if c_below > n:
-        # quantile estimate overshot (heavy ties) — extend band downward
-        band_cond = F.col(score_col) <= F.lit(hi)
-        c_band += c_below
-        c_below = 0
-    r = n - c_below
-    if r <= 0:
-        return df.withColumn(
-            flag_col, F.coalesce(F.col(score_col) < F.lit(lo), F.lit(False))
-        )
-    if r > c_band:
-        # upper estimate undershot — extend band upward (nulls excluded,
-        # matching the SQL twins' NULLS-LAST ranking)
-        band_cond = (
-            (F.col(score_col) >= F.lit(lo))
-            if c_below
-            else F.col(score_col).isNotNull()
-        )
-        c_band = c_nonnull - c_below
-
-    # rank only the band to find the exact n-th (score, id) cutoff, then
+    # rank only the band to find the exact r-th (score, id) cutoff, then
     # flag with a pure predicate — zero joins, one final pass.  A band
     # within the task budget ranks through one (tiny) task; a bigger one
     # (tie blocks, error floor) routes to the range-partitioned exact
     # selection, which never sorts a data-sized band in one task.
-    cap = task_cap if task_cap is not None else _BAND_TARGET_ROWS
-    band = df.where(band_cond)
     if c_band <= cap:
-        w = Window.orderBy(F.col(score_col).asc(), F.col(id_col).asc())
-        cut = (
+        w = Window.orderBy(score.asc_nulls_last(), rid.asc())
+        s_star, id_star = (
             band.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == F.lit(r))
             .select(score_col, id_col)
-            .collect()
+            .collect()[0]
         )
-        s_star, id_star = cut[0][0], cut[0][1]
     else:
         row = _rows_at_ranks_selection(
             band.select(score_col, id_col), [score_col, id_col], {r}, cap
         )[r]
         s_star, id_star = row[score_col], row[id_col]
-    # coalesce: a NULL score (e.g. null caption → null features) must
-    # flag a definite False, matching the SQL twins' NULLS-LAST ranking,
-    # not propagate NULL into a boolean output column
+    if s_star is None:
+        return df.withColumn(flag_col, score.isNotNull() | (rid <= F.lit(id_star)))
+    # coalesce: a NULL score ranks after every non-null one, so below a
+    # non-null cutoff it flags a definite False, never NULL
     return df.withColumn(
         flag_col,
         F.coalesce(
-            (F.col(score_col) < F.lit(s_star))
-            | (
-                (F.col(score_col) == F.lit(s_star))
-                & (F.col(id_col) <= F.lit(id_star))
-            ),
+            (score < F.lit(s_star)) | ((score == F.lit(s_star)) & (rid <= F.lit(id_star))),
             F.lit(False),
         ),
     )
+
+
+def flag_bottom_n_issues(
+    scored: DataFrame,
+    n_issues: int,
+    total: int,
+    score_col: str,
+    id_col: str,
+    label_col: str = "label",
+    probs_col: str = "pred_probs",
+) -> DataFrame:
+    """The batched dataflow's last step: flag the exact bottom ``n_issues``
+    rows by (score, id) as ``is_label_issue``, then unflag rows the
+    reduce-issues rule keeps (label_issues_batched.py:43-227)."""
+    flagged = bottom_n_flags(scored, n_issues, score_col, id_col, total=total)
+    return _apply_reduce(flagged, label_col, probs_col)
 
 
 def find_label_issues(
@@ -275,7 +311,7 @@ def find_label_issues(
         return _apply_reduce(out, label_col, probs_col)
 
     if filter_by == "confident_learning":
-        binned = with_confident_bins(df, thresholds, label_col, probs_col)
+        binned = with_confident_bins(df, thresholds, probs_col)
         out = binned.withColumn(
             "is_label_issue",
             F.col("is_confident") & (F.col("true_label_guess") != label),
@@ -284,27 +320,7 @@ def find_label_issues(
 
     if filter_by in ("low_self_confidence", "low_normalized_margin"):
         method = filter_by[4:]
-        # fused issue-count + row-count: one aggregation job instead of
-        # num_label_issues' count followed by bottom_n_flags' total
-        # count (identical values: same binned condition, same total)
-        binned = _with_reduce_mask(
-            with_confident_bins(df, thresholds, label_col, probs_col),
-            label_col,
-            probs_col,
-        )
-        agg_row = binned.agg(
-            F.sum(
-                F.when(
-                    F.col("is_confident")
-                    & (F.col("true_label_guess") != label)
-                    & ~F.col("_reduce_ok"),
-                    1,
-                ).otherwise(0)
-            ).alias("_n"),
-            F.count(F.lit(1)).alias("_total"),
-        ).first()
-        n_issues = int(agg_row["_n"] or 0)
-        total = int(agg_row["_total"])
+        n_issues, total = issue_counts(df, thresholds, label_col, probs_col)
         scored = with_label_quality_scores(
             df, num_classes, label_col, probs_col, method=method, out_col="_lq"
         )
@@ -312,9 +328,7 @@ def find_label_issues(
         return out.drop("_lq")
 
     # prune_by_class / prune_by_noise_rate / both need the calibrated joint
-    binned = with_confident_bins(df, thresholds, label_col, probs_col)
-    cj_raw = confident_joint_counts(binned, num_classes, label_col)
-    counts = label_counts(df, num_classes, label_col)
+    cj_raw, counts = raw_joint_and_counts(df, num_classes, thresholds, label_col, probs_col)
     cj = matrix_ops.calibrate_confident_joint(cj_raw, counts)
     pcm = matrix_ops.keep_at_least_n_per_class(
         cj.T, n=min_examples_per_class, frac_noise=frac_noise
@@ -363,7 +377,9 @@ def _prune_by_class_mask(
     }
     issues_arr = F.array(*[F.lit(num_issues[k]) for k in k_range])
     label = F.col(label_col).cast("int")
-    scored = df.select(
+    # a NULL label is in no class; it must not reach element_at below,
+    # which returns a literal array's LAST slot for a NULL column index
+    scored = df.where(label.isNotNull()).select(
         id_col,
         label.alias("_lbl"),
         F.element_at(F.col(probs_col), label + 1).cast("double").alias("_pk"),
@@ -448,36 +464,20 @@ def find_label_issues_batched(
     experimental/label_issues_batched.py:43-227, natively distributed:
 
     pass 1  groupBy(label) mean → thresholds (order-invariant)
-    pass 2  score projection + issue-count aggregation
-    final   exact bottom-n by (score, id) + reduce-issues unflag
+    pass 2  :func:`issue_counts` — issue count + row count, one aggregation
+    final   :func:`flag_bottom_n_issues` — exact bottom-n by (score, id),
+            then the reduce-issues unflag
 
-    ``thorough=False`` uses the fast count
-    ``sum(p[argmax] >= t[argmax]-1e-6 AND argmax != label)``
-    (label_issues_batched.py:564-673); ``thorough=True`` matches
+    ``thorough=False`` uses :func:`fast_issue_rule`
+    (label_issues_batched.py:564-673) — the rule
+    ``pipeline.caption_scores`` ships; ``thorough=True`` matches
     num_label_issues(off_diagonal).
     """
     thresholds = get_confident_thresholds(df, num_classes, label_col, probs_col)
-    label = F.col(label_col).cast("int")
-
-    if thorough:
-        n_issues = num_label_issues(
-            df, num_classes, label_col, probs_col, "off_diagonal", thresholds
-        )
-    else:
-        t_arr = F.array(*[F.lit(float(t)) for t in thresholds])
-        am = predicted_label(F.col(probs_col))
-        confident_neq = (
-            (F.array_max(F.col(probs_col)).cast("double")
-             >= F.element_at(t_arr, am + 1) - F.lit(1e-6))
-            & (am != label)
-        )
-        n_issues = int(
-            df.agg(F.sum(F.when(confident_neq, 1).otherwise(0))).collect()[0][0] or 0
-        )
-
+    n_issues, total = issue_counts(df, thresholds, label_col, probs_col, thorough)
     scored = with_label_quality_scores(
-        df, num_classes, label_col, probs_col, method="self_confidence", out_col="_lq"
+        df, num_classes, label_col, probs_col, method="self_confidence"
     )
-    flagged = bottom_n_flags(scored, n_issues, "_lq", id_col)
-    out = _apply_reduce(flagged, label_col, probs_col)
-    return out.withColumnRenamed("_lq", "label_quality")
+    return flag_bottom_n_issues(
+        scored, n_issues, total, "label_quality", id_col, label_col, probs_col
+    )

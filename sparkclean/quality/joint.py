@@ -7,39 +7,34 @@ Per-row projection (pure Catalyst — no UDF):
     guess    = argmax(p) if n_conf > 1 else first true bin
     counted  iff n_conf >= 1
 
-then a K×K ``groupBy(label, guess).count()`` collected to the driver and
-calibrated there (semantics: count.py:445-622; calibration count.py:221-291).
-The K×K collect is K^2 rows regardless of N — the only driver-side state.
+then ONE ``groupBy(label, guess).count()`` over all rows (guess -1 for
+unconfident rows) collected to the driver: its confident cells are the raw
+K×K joint, its per-label sums the class counts the calibration needs
+(semantics: count.py:445-622; calibration count.py:221-291).  The collect
+is K·(K+1) rows regardless of N — the only driver-side state.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import FLOATING_POINT_COMPARISON
 from . import matrix_ops
-from .scores import predicted_label
+from .scores import literal_array, predicted_label
 from .thresholds import get_confident_thresholds
-
-
-def _thresholds_arr(thresholds: list[float]) -> Column:
-    return F.array(*[F.lit(float(t)) for t in thresholds])
 
 
 def with_confident_bins(
     df: DataFrame,
     thresholds: list[float],
-    label_col: str = "label",
     probs_col: str = "pred_probs",
-    guess_col: str = "true_label_guess",
-    confident_col: str = "is_confident",
 ) -> DataFrame:
     """Append ``true_label_guess`` (int, -1 when unconfident) and
     ``is_confident`` (bool) columns."""
     probs = F.col(probs_col)
-    t = _thresholds_arr(thresholds)
+    t = literal_array(thresholds)
     bins = F.zip_with(probs, t, lambda p, th: p.cast("double") >= th - F.lit(FLOATING_POINT_COMPARISON))
     n_conf = F.aggregate(bins, F.lit(0), lambda acc, b: acc + F.when(b, 1).otherwise(0))
     first_bin = (F.array_position(bins, F.lit(True)) - F.lit(1)).cast("int")
@@ -48,42 +43,52 @@ def with_confident_bins(
         .when(n_conf == 1, first_bin)
         .otherwise(F.lit(-1))
     )
-    return df.withColumn(guess_col, guess).withColumn(confident_col, n_conf >= 1)
+    return df.withColumn("true_label_guess", guess).withColumn("is_confident", n_conf >= 1)
 
 
-def confident_joint_counts(
+def raw_joint_and_counts(
     df: DataFrame,
     num_classes: int,
+    thresholds: list[float],
     label_col: str = "label",
-    guess_col: str = "true_label_guess",
-    confident_col: str = "is_confident",
-) -> np.ndarray:
-    """Collect the raw K×K confident joint: rows = given (noisy) label,
-    cols = confident true-label guess. Diagonal clipped to >= 1
-    (count.py:612)."""
+    probs_col: str = "pred_probs",
+) -> tuple[np.ndarray, np.ndarray]:
+    """The raw K×K confident joint (rows = given label, cols = confident
+    true-label guess; diagonal clipped to >= 1, count.py:612) and the
+    zero-filled class counts, both read from ONE ``groupBy(label, guess)``
+    over all rows.  NULL and out-of-range labels are skipped, as in
+    get_confident_thresholds."""
     rows = (
-        df.where(F.col(confident_col))
-        .groupBy(F.col(label_col).cast("int").alias("_s"), F.col(guess_col).alias("_y"))
+        with_confident_bins(df, thresholds, probs_col)
+        .groupBy(
+            F.col(label_col).cast("int").alias("_s"),
+            F.col("true_label_guess").alias("_y"),
+        )
         .count()
         .collect()
     )
     cj = np.zeros((num_classes, num_classes), dtype=np.int64)
+    counts = np.zeros(num_classes, dtype=np.int64)
     for r in rows:
-        if 0 <= r["_s"] < num_classes and 0 <= r["_y"] < num_classes:
-            cj[r["_s"], r["_y"]] = r["count"]
+        s, y = r["_s"], r["_y"]
+        if s is None or not 0 <= s < num_classes:
+            continue
+        counts[s] += r["count"]
+        if 0 <= y < num_classes:  # y = -1: no confident bin
+            cj[s, y] = r["count"]
     np.fill_diagonal(cj, np.diagonal(cj).clip(min=1))
-    return cj
+    return cj, counts
 
 
 def label_counts(
     df: DataFrame, num_classes: int, label_col: str = "label"
 ) -> np.ndarray:
     """bincount(labels) with zero-fill for missing classes
-    (internal/util.py:113-177)."""
+    (internal/util.py:113-177); NULL labels are skipped."""
     rows = df.groupBy(F.col(label_col).cast("int").alias("_k")).count().collect()
     out = np.zeros(num_classes, dtype=np.int64)
     for r in rows:
-        if 0 <= r["_k"] < num_classes:
+        if r["_k"] is not None and 0 <= r["_k"] < num_classes:
             out[r["_k"]] = r["count"]
     return out
 
@@ -97,15 +102,11 @@ def compute_confident_joint(
     calibrate: bool = True,
 ) -> np.ndarray:
     """End-to-end confident joint: thresholds agg → bin projection →
-    K×K count agg → optional driver-side calibration."""
+    one (label, guess) count agg → optional driver-side calibration."""
     if thresholds is None:
         thresholds = get_confident_thresholds(df, num_classes, label_col, probs_col)
-    binned = with_confident_bins(df, thresholds, label_col, probs_col)
-    cj = confident_joint_counts(binned, num_classes, label_col)
-    if calibrate:
-        counts = label_counts(df, num_classes, label_col)
-        cj = matrix_ops.calibrate_confident_joint(cj, counts)
-    return cj
+    cj, counts = raw_joint_and_counts(df, num_classes, thresholds, label_col, probs_col)
+    return matrix_ops.calibrate_confident_joint(cj, counts) if calibrate else cj
 
 
 def _ml_binary_frame(

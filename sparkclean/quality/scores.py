@@ -21,8 +21,10 @@ from ..constants import CLIPPING_LOWER_BOUND, FLOATING_POINT_COMPARISON
 SCORE_METHODS = ("self_confidence", "normalized_margin", "confidence_weighted_entropy")
 
 
-def _arr(thresholds: list[float]) -> Column:
-    return F.array(*[F.lit(float(t)) for t in thresholds])
+def literal_array(values) -> Column:
+    """A driver-collected K-vector (confident thresholds, a posterior
+    multiplier) inlined as a literal ARRAY<DOUBLE> — broadcast by value."""
+    return F.array(*[F.lit(float(v)) for v in values])
 
 
 def self_confidence(label: Column, probs: Column) -> Column:
@@ -89,7 +91,7 @@ def with_adjusted_probs(
     columns, so the fold evaluates once per row instead of once per
     ELEMENT (the interpreted-HOF O(K²) hazard; same discipline as
     with_pyx_posterior)."""
-    t = _arr(thresholds)
+    t = literal_array(thresholds)
     t_max = float(max(thresholds))
     shifted = F.zip_with(
         F.col(probs_col), t, lambda p, th: p.cast("double") - th + F.lit(t_max)
@@ -165,7 +167,7 @@ def with_pyx_posterior(
     (matrix_ops.compute_pyx_multiplier), inlined as a literal array. The raw
     product is materialised as its own column first so the normalising sum is
     not re-evaluated per element (interpreted-HOF O(K^2) hazard)."""
-    m = _arr(multiplier)
+    m = literal_array(multiplier)
     raw = F.zip_with(
         F.col(probs_col), m, lambda p, mult: F.least(F.greatest(p.cast("double") * mult, F.lit(0.0)), F.lit(1.0))
     )

@@ -14,9 +14,6 @@ pass 2 scores each batch against the thresholds seen so far.  Here:
   deployment: thresholds fitted offline (pass 1 over the history),
   streaming pass 2 = narrow map stages, so the query needs no state store
   and scales with source parallelism.
-
-Windowed per-language drop-rate counters ride on processing time via
-``current_timestamp`` windows.
 """
 
 from __future__ import annotations
@@ -25,23 +22,19 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .constants import CONFIDENT_THRESHOLDS_LOWER_BOUND, FLOATING_POINT_COMPARISON
+from .constants import CONFIDENT_THRESHOLDS_LOWER_BOUND
 from .pipeline import NUM_CLASSES, caption_label_frame
-from .quality.scores import predicted_label, self_confidence
+from .quality.issues import fast_issue_rule
+from .quality.scores import self_confidence
 from .text.scrub import scrub_col
 
 
 def _score_batch(df: DataFrame, thresholds: list[float]) -> DataFrame:
-    t_arr = F.array(*[F.lit(float(t)) for t in thresholds])
-    am = predicted_label(F.col("pred_probs"))
-    confident_neq = (
-        F.array_max(F.col("pred_probs"))
-        >= F.element_at(t_arr, am + 1) - F.lit(FLOATING_POINT_COMPARISON)
-    ) & (am != F.col("label"))
+    candidate = fast_issue_rule(F.col("label"), F.col("pred_probs"), thresholds)
     return (
         df.withColumn("quality_score", self_confidence(F.col("label"), F.col("pred_probs")))
-        .withColumn("is_issue_candidate", confident_neq)
-        .withColumn("keep", (F.col("label") == 0) & ~confident_neq)
+        .withColumn("is_issue_candidate", candidate)
+        .withColumn("keep", (F.col("label") == 0) & ~candidate)
     )
 
 
@@ -140,20 +133,6 @@ class StreamingLabelInspector:
             self.release_batch_cache()
 
         return stream_df.writeStream.foreachBatch(handle)
-
-
-def language_window_counts(scored: DataFrame) -> DataFrame:
-    """Processing-time windowed keep/drop counters per language — the
-    streaming lineage metric (1-minute tumbling windows)."""
-    stamped = scored.withColumn("_ts", F.current_timestamp())
-    return (
-        stamped.withWatermark("_ts", "2 minutes")
-        .groupBy(F.window("_ts", "1 minute"), F.col("pred_lang"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept"),
-        )
-    )
 
 
 def windowed_event_counts(

@@ -30,7 +30,6 @@ import hashlib
 import numpy as np
 import pandas as pd
 
-from ..constants import CONFIDENT_THRESHOLDS_LOWER_BOUND
 from .ppl import FALLBACK_LOGP, LOGP_MAX, LOGP_MIN, RES
 from .shared import ascii_lower_py, ENGLISH_STOPWORDS, LANG_MARKERS, LANG_ORDER, trim_memo
 

@@ -125,6 +125,18 @@ def _bottom_n(scores, n):
     return mask
 
 
+def find_label_issues_batched_fast(labels, probs):
+    """label_issues_batched with the fast count: n = #rows whose argmax
+    clears its own threshold and differs from the label; flag the bottom-n
+    self-confidences, then unflag the reduce-issues rows."""
+    t = confident_thresholds(labels, probs)
+    am = probs.argmax(axis=1)
+    n = int(((probs.max(axis=1) >= t[am] - FPC) & (am != labels)).sum())
+    mask = _bottom_n(self_confidence(labels, probs), n)
+    mask[reduce_mask(labels, probs)] = False
+    return mask
+
+
 def find_label_issues(labels, probs, filter_by="prune_by_noise_rate", min_examples_per_class=1, frac_noise=1.0):
     K = probs.shape[1]
     t = confident_thresholds(labels, probs)

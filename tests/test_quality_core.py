@@ -13,6 +13,7 @@ from sparkclean.quality import (
     find_label_issues,
     find_label_issues_batched,
     get_confident_thresholds,
+    label_counts,
     num_label_issues,
     with_label_quality_scores,
 )
@@ -182,6 +183,55 @@ def test_batched_matches_low_self_confidence(spark, fixture_np, fixture_df):
     assert union == 0 or inter / union > 0.95
     # thorough mode reproduces the exact low_self_confidence selection
     assert np.array_equal(got, exact)
+
+
+@pytest.mark.parametrize("data", ["noisy", "flat"])
+def test_batched_fast_rule_matches_numpy(spark, fixture_np, fixture_df, data):
+    # thorough=False is the rule pipeline.caption_scores ships: fast
+    # count, exact bottom-n by (score, id), reduce-issues unflag.  On the
+    # near-uniform "flat" input the unflag removes bottom-n rows.
+    if data == "noisy":
+        labels, probs, _ = fixture_np
+        df = fixture_df
+    else:
+        rng = np.random.default_rng(0)
+        probs = rng.dirichlet([30.0] * 3, size=200)
+        labels = rng.integers(0, 3, 200)
+        df = probs_df(spark, labels, probs)
+    got = collect_sorted(
+        find_label_issues_batched(df, 3, thorough=False), "is_label_issue"
+    ).astype(bool)
+    want = R.find_label_issues_batched_fast(labels, probs)
+    assert want.any()
+    assert np.array_equal(got, want)
+
+
+def test_null_label_is_skipped_by_joint_and_counts(spark, fixture_np, fixture_df):
+    """A NULL label row counts in no class: the confident joint, the
+    class counts and the prune masks equal those of the frame without
+    it, and the row itself is never flagged."""
+    labels, probs, _ = fixture_np
+    null_row = spark.createDataFrame(
+        [(10_000, None, [0.2, 0.5, 0.3])], fixture_df.schema
+    )
+    with_null = fixture_df.unionByName(null_row)
+    t = get_confident_thresholds(fixture_df, 3)
+    for calibrate in (False, True):
+        assert np.array_equal(
+            compute_confident_joint(with_null, 3, thresholds=t, calibrate=calibrate),
+            compute_confident_joint(fixture_df, 3, thresholds=t, calibrate=calibrate),
+        )
+    assert np.array_equal(label_counts(with_null, 3), label_counts(fixture_df, 3))
+    for filter_by in ("prune_by_noise_rate", "prune_by_class", "both"):
+        got = collect_sorted(
+            find_label_issues(with_null, 3, filter_by=filter_by, thresholds=t),
+            "is_label_issue",
+        )
+        want = collect_sorted(
+            find_label_issues(fixture_df, 3, filter_by=filter_by, thresholds=t),
+            "is_label_issue",
+        )
+        assert np.array_equal(got, np.append(want, False)), filter_by
 
 
 def test_partition_invariance(spark, fixture_np):

@@ -313,3 +313,41 @@ def test_bottom_n_flags_heavy_ties_capped(spark):
         order = np.lexsort((ids, scores))
         want = {int(ids[i]) for i in order[:n_flag]}
         assert got == want, n_flag
+
+
+@pytest.mark.parametrize(
+    "scores",
+    [[0.4, None, 0.1, 0.4, None, 0.9, 0.2, None, 0.4, 0.7], [None] * 6],
+    ids=["some_null", "all_null"],
+)
+def test_bottom_n_flags_past_non_null_scores_matches_duckdb(spark, scores):
+    """n above the non-null score count: the flags are the SQL twins'
+    ``row_number() OVER (ORDER BY score ASC NULLS LAST, id ASC) <= n`` —
+    every non-null score, then the NULL-score rows by id — on the
+    small-input path and on the band path alike."""
+    import duckdb
+
+    from sparkclean.quality.issues import bottom_n_flags
+
+    ids = [7, 3, 9, 1, 8, 2, 6, 0, 5, 4][: len(scores)]
+    rows = list(zip(ids, scores))
+    df = spark.createDataFrame(rows, "id: long, score: double")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, score DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    for n in range(len(rows) + 1):
+        want = {
+            r[0]
+            for r in con.execute(
+                "SELECT id FROM (SELECT id, row_number() OVER "
+                "(ORDER BY score ASC NULLS LAST, id ASC) AS rn FROM t) "
+                f"WHERE rn <= {n}"
+            ).fetchall()
+        }
+        for cap in (None, 4):
+            flags = {
+                r["id"]: r["is_label_issue"]
+                for r in bottom_n_flags(df, n, "score", "id", task_cap=cap).collect()
+            }
+            assert None not in flags.values(), (n, cap)
+            assert {i for i, f in flags.items() if f} == want, (n, cap)

@@ -61,15 +61,21 @@ def test_score_stream_available_now(spark, corpus, tmp_path):
     out = spark.sql("SELECT * FROM scored_stream").collect()
     assert len(out) == 400
 
+    times = {}
     batch = {
         r["image_id"]: r
         for r in caption_scores(
-            caption_label_frame(static, "caption"), id_col="image_id", text_col="caption"
+            caption_label_frame(static, "caption"),
+            id_col="image_id",
+            text_col="caption",
+            stage_times=times,
         )
         .select("image_id", "label", "pred_lang", "quality_score", "scrubbed_text")
         .collect()
     }
     assert len(batch) == 400
+    # bench.py and perfbench read these two timers
+    assert set(times) == {"pass1_scan_thresholds", "pass2_issue_count"}
     for r in out:
         b = batch[r["image_id"]]
         assert r["label"] == b["label"]
