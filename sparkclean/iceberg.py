@@ -222,8 +222,39 @@ def _current_snapshot(meta: dict, snapshot_id: int | None = None) -> dict:
 # ----------------------------------------------------- commit
 
 
+#: the footer key under which Spark's parquet writer stores the
+#: written frame's schema as JSON
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt):
+    """``dt`` with every level nullable (struct fields, array elements,
+    map values), as Spark's file sources report a read schema."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 def _spark_schema_of(spark, parquet_file: str):
-    return spark.read.parquet(parquet_file).schema
+    """The schema ``spark.read.parquet(parquet_file)`` reports.  A file
+    Spark wrote carries it in its footer, which pyarrow reads without a
+    Spark job (schema inference runs one); other files go through
+    ``spark.read``."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    stored = (pq.read_metadata(parquet_file).metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is None:
+        return spark.read.parquet(parquet_file).schema
+    return _as_nullable(StructType.fromJson(json.loads(stored)))
 
 
 def commit_append(

@@ -216,6 +216,9 @@ def decode_and_project(df: DataFrame) -> DataFrame:
     schema = schema_prefix + ", " + STATS_FIELDS
     _pkg_root = _PKG_ROOT
 
+    # `run` closes over the whole file list, so every Python task
+    # unpickles every path (~100 B each) though it reads only its own
+    # slice: negligible at thousands of files, it grows with the count.
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import sys as _sys
 
@@ -239,10 +242,63 @@ def parquet_files(path: str) -> list[str]:
     return sorted(_glob.glob(f"{path.rstrip('/')}/*.parquet"))
 
 
+def _read_scan_file(fname: str, columns: list[str]):
+    """One parquet file of a :func:`decode_scan` task as an Arrow table.
+
+    An unreadable file fails the task; it is not a degenerate image, and
+    dropping its rows would change the run's counters with no error.
+    Every read failure (truncated, deleted after plan build, a column of
+    the first file's schema missing) raises an error naming the file."""
+    import pyarrow.parquet as pq
+
+    try:
+        # use_threads=False: the default threaded read spins a
+        # cpu_count() Arrow pool in EVERY worker process (32 workers x
+        # 32 threads oversubscribes the host); the single-thread
+        # buffered read measured 4x faster solo (0.112 s -> 0.028 s per
+        # 28 MB file) and won the 32-process A/B (mmap measured slightly
+        # worse under concurrency: page-fault path vs readahead).
+        tbl = pq.read_table(fname, use_threads=False)
+    except Exception as e:
+        raise OSError(f"decode_scan: cannot read {fname}: {e}") from e
+    missing = [c for c in columns if c not in tbl.column_names]
+    if missing:
+        raise ValueError(
+            f"decode_scan: {fname} has no column {missing[0]!r} "
+            f"(every file needs the columns of the first file's schema)"
+        )
+    return tbl
+
+
+#: rows per decode_scan task once a corpus outgrows one task per core
+#: (see :func:`_scan_tasks`).  Chosen so the measured corpora decide the
+#: count: perfbench ``images`` (8 x 512 rows, local[4]) runs one wave of
+#: 4 tasks, and bench.py's sf0.1 corpus (240k rows in 256 files,
+#: local[32]) stays at 4·par = 128 tasks of 2 files each.
+SCAN_TASK_ROWS = 1024
+
+
+def _scan_tasks(n_files: int, rows0: int, par: int) -> int:
+    """Task count of :func:`decode_scan` for ``n_files`` files of about
+    ``rows0`` rows on ``par`` cores.
+
+    Every Python task pays a fixed ~0.15-0.2 s start-up before its UDF
+    runs (pyspark's worker setup calls ``importlib.invalidate_caches()``,
+    which makes each zipimporter re-read its archive's directory), so a
+    corpus of up to ``par x SCAN_TASK_ROWS`` rows runs ONE task per core,
+    in one wave.  Larger corpora get ~``SCAN_TASK_ROWS`` rows per task up
+    to 4x the cluster (straggler balance), then more rows per task.
+    Never more tasks than files.  The count is then lowered to
+    ``ceil(files / ceil(files / n))``, the fewest tasks whose longest one
+    reads no more files than at ``n`` (fewer start-ups, same longest
+    task)."""
+    n = min(n_files, 4 * par, max(par, -(-rows0 * n_files // SCAN_TASK_ROWS)))
+    return -(-n_files // -(-n_files // n))
+
+
 def decode_scan(
     spark,
     path: str,
-    files_per_task: int = 1,
     with_caption_features: bool = False,
     text_col: str = "caption",
 ) -> DataFrame:
@@ -252,21 +308,31 @@ def decode_scan(
     aggregate wall in local mode; on a real cluster the same pattern
     avoids double-materialising the payload in the JVM).
 
-    Spark still owns the file-split assignment, retries, and everything
+    Spark still owns the task scheduling, retries, and everything
     downstream; this is the standard vectorized-python-reader shape for
     binary-heavy tables.  Reads the files :func:`parquet_files` lists and
     emits the same schema as :func:`decode_and_project`;
     ``with_caption_features=True`` appends what
     ``pipeline.caption_label_frame`` appends, from the same batch
     function run on ``text_col`` in this pass (ValueError at plan build
-    if the files lack it).
+    if the files lack it).  A file that cannot be read, or lacks a
+    column of the first file's schema, fails the job with an error
+    naming it.
+
+    The plan is ``spark.range(0, n_tasks, 1, n_tasks)`` → mapInPandas:
+    task ``i`` reads ``files[i::n_tasks]``, so no file-list DataFrame,
+    exchange or extra job is built.  ``n_tasks`` is sized by rows (see
+    :func:`_scan_tasks`); row order is not part of the contract.
     """
     import pyarrow.parquet as _pq
 
     files = parquet_files(path)
     if not files:
         raise ValueError(f"no parquet files under {path}")
-    arrow_schema = _pq.read_schema(files[0])
+    # one footer read gives both the schema and the row count
+    with _pq.ParquetFile(files[0]) as first:
+        arrow_schema = first.schema_arrow
+        rows0 = max(int(first.metadata.num_rows), 1)
     from ..text.fast import CAPTION_FIELDS, CAPTION_NAMES
 
     if with_caption_features and text_col not in arrow_schema.names:
@@ -289,65 +355,43 @@ def decode_scan(
             ) from e
     schema = ", ".join(ddl + [STATS_FIELDS] + ([CAPTION_FIELDS] if with_caption_features else []))
 
-    # Task granularity: one task per tiny file starves on per-task fixed
-    # costs (a 60k-image corpus in 256 x 234-row files spent 2.4x longer
-    # on overhead than decode), while over-grouping large files loses
-    # scheduling waves and straggler balance.  Group only when files are
-    # small: target >= ~512 rows per task, measured from one parquet
-    # footer (uniform-ish corpora; retries/AQE keep per-file granularity
-    # at the 100 TB end where files are row-group sized anyway).
-    par = spark.sparkContext.defaultParallelism
-    rows0 = max(int(_pq.read_metadata(files[0]).num_rows), 1)
-    fpt = max(files_per_task, -(-512 // rows0)) if rows0 < 512 else files_per_task
-    n_tasks = max(len(files) // fpt, 1)
-    # Cap the fan-out at 4x the cluster instead of shuffling it back down
-    # afterwards: the old shape (256 tasks -> repartition(2*par)) paid a
-    # full exchange of every narrow output row just to cut downstream
-    # task-launch overhead.  Grouping more files per task at build time
-    # removes that Exchange outright (guide §2.4) — same balance (files
-    # are uniform row-group-sized), zero shuffle.  n_tasks is known at
-    # build time, so no .rdd partition probe is needed.
-    n_tasks = min(n_tasks, 4 * par)
-    fdf = spark.createDataFrame([(f,) for f in files], "file string").repartition(n_tasks)
+    n_tasks = _scan_tasks(len(files), rows0, spark.sparkContext.defaultParallelism)
+    read_cols = narrow_cols + ["bytes"]
 
     _pkg_root = _PKG_ROOT
 
+    # `run` closes over the whole file list, so every Python task
+    # unpickles every path (~100 B each) though it reads only its own
+    # slice: negligible at thousands of files, it grows with the count.
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import sys as _sys
 
-        import pyarrow.parquet as pq
-
         if _pkg_root not in _sys.path:
             _sys.path.insert(0, _pkg_root)
-        from sparkclean.images.decode import _binary_views, _stats_arrays
+        from sparkclean.images.decode import _binary_views, _read_scan_file, _stats_arrays
 
         for pdf in batches:
-            for fname in pdf["file"]:
-                # use_threads=False: the default threaded read spins a
-                # cpu_count() Arrow pool in EVERY worker process (32
-                # workers x 32 threads oversubscribes the host); the
-                # single-thread buffered read measured 4x faster solo
-                # (0.112 s -> 0.028 s per 28 MB file) and won the
-                # 32-process A/B (mmap measured slightly worse under
-                # concurrency: page-fault path vs readahead).
-                tbl = pq.read_table(fname, use_threads=False)
-                out = {c: tbl.column(c).to_pandas() for c in narrow_cols}
-                # blobs as zero-copy views of the Arrow buffer — the
-                # multi-KB payload is never copied into Python bytes
-                stats = _stats_arrays(
-                    _binary_views(tbl.column("bytes")),
-                    out["w"].to_numpy(),
-                    out["h"].to_numpy(),
-                    out["fmt"].to_numpy(),
-                )
-                out.update(stats)
-                if with_caption_features:
-                    from sparkclean.text.fast import caption_label_batch
+            for task in pdf["id"]:
+                for fname in files[int(task) :: n_tasks]:
+                    tbl = _read_scan_file(fname, read_cols)
+                    out = {c: tbl.column(c).to_pandas() for c in narrow_cols}
+                    # blobs as zero-copy views of the Arrow buffer — the
+                    # multi-KB payload is never copied into Python bytes
+                    stats = _stats_arrays(
+                        _binary_views(tbl.column("bytes")),
+                        out["w"].to_numpy(),
+                        out["h"].to_numpy(),
+                        out["fmt"].to_numpy(),
+                    )
+                    out.update(stats)
+                    if with_caption_features:
+                        from sparkclean.text.fast import caption_label_batch
 
-                    out.update(caption_label_batch(out[text_col]))
-                yield pd.DataFrame(out)
+                        out.update(caption_label_batch(out[text_col]))
+                    yield pd.DataFrame(out)
 
-    return fdf.mapInPandas(run, schema)
+    # one row per partition: partition i carries id i, i.e. task i
+    return spark.range(0, n_tasks, 1, n_tasks).mapInPandas(run, schema)
 
 
 def with_image_issues(stats: DataFrame) -> DataFrame:

@@ -22,10 +22,10 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .constants import CONFIDENT_THRESHOLDS_LOWER_BOUND
 from .pipeline import NUM_CLASSES, caption_label_frame
 from .quality.issues import fast_issue_rule
 from .quality.scores import self_confidence
+from .quality.thresholds import finish_thresholds
 from .text.scrub import scrub_col
 
 
@@ -69,8 +69,7 @@ class StreamingLabelInspector:
         self.metrics: list[dict] = []
 
     def thresholds(self) -> list[float]:
-        t = np.where(self._counts > 0, self._sums / np.maximum(self._counts, 1), 2.0)
-        return [float(x) for x in np.clip(t, CONFIDENT_THRESHOLDS_LOWER_BOUND, None)]
+        return finish_thresholds(self._sums / np.maximum(self._counts, 1), self._counts > 0)
 
     def process_batch(self, batch_df: DataFrame, text_col: str = "caption") -> DataFrame:
         """Update thresholds from this batch, then score it with the

@@ -453,3 +453,59 @@ def test_commit_files_rejects_empty_list(spark, tmp_path):
 
     with pytest.raises(ValueError, match="non-empty"):
         commit_files(spark, [], str(tmp_path / "t"))
+
+
+def test_spark_schema_of_matches_spark_read(spark, tmp_path):
+    """The schema the first commit registers equals what
+    ``spark.read.parquet`` reports, for a Spark-written file (read from
+    its footer: a non-nullable column, an array<double>, structs and a
+    map, all reported nullable) and a pyarrow-written one (no Spark
+    schema in the footer: the spark.read fallback)."""
+    import glob as _glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkclean.iceberg import _spark_schema_of
+
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    sdir = str(tmp_path / "spark_written")
+    spark.createDataFrame(
+        [(1, [0.5, None], (1, [2]), {"k": 2.0}, b"\x01")],
+        "id long not null, emb array<double>, s struct<a:int not null, b:array<int>>, "
+        "m map<string,double>, payload binary",
+    ).coalesce(1).write.parquet(sdir)
+    sfile = _glob.glob(os.path.join(sdir, "*.parquet"))[0]
+    stored = json.loads(pq.read_metadata(sfile).metadata[key])
+    assert stored["fields"][0]["nullable"] is False
+    assert _spark_schema_of(spark, sfile) == spark.read.parquet(sfile).schema
+
+    afile = str(tmp_path / "arrow_written.parquet")
+    pq.write_table(
+        pa.table({"x": pa.array([1], pa.int64()), "v": pa.array([[1.0, 2.0]])}), afile
+    )
+    assert key not in (pq.read_metadata(afile).metadata or {})
+    assert _spark_schema_of(spark, afile) == spark.read.parquet(afile).schema
+
+
+def test_publish_checkpoint_submits_no_spark_job(spark, tmp_path):
+    """The first publish of a checkpoint to a fresh location reads the
+    table schema from a bucket file's footer: no Spark job runs."""
+    from sparkclean.checkpoint import run_checkpointed
+    from sparkclean.iceberg import publish_checkpoint
+
+    df = spark.range(50).select(
+        F.col("id").alias("image_id"),
+        (F.col("id") % 2 == 0).alias("keep"),
+        F.when(F.col("id") % 2 == 1, F.lit("low_quality")).alias("drop_reason"),
+    )
+    out = str(tmp_path / "ckpt")
+    run_checkpointed(df, out, id_col="image_id", n_buckets=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("publish_checkpoint_probe", "publish_checkpoint")
+    try:
+        snap = publish_checkpoint(spark, out, str(tmp_path / "fresh"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert snap["summary"]["added-records"] == "50"
+    assert sc.statusTracker().getJobIdsForGroup("publish_checkpoint_probe") == []

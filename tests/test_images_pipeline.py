@@ -257,6 +257,102 @@ def test_decode_scan_rejects_unmappable_column_type(spark, tmp_path):
         decode_scan(spark, str(path))
 
 
+def _write_scan_files(path, n_files, rows, drop=None):
+    """``n_files`` flat parquet files of ``rows`` rows each, with the
+    columns decode_scan reads (empty blobs decode as failures, which is
+    enough for the scan's shape); ``drop`` removes one column from the
+    last file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    files = []
+    for i in range(n_files):
+        tbl = pa.table(
+            {
+                "image_id": pa.array([f"img_{i}_{j}" for j in range(rows)]),
+                "bytes": pa.array([b""] * rows),
+                "w": pa.array([1] * rows, pa.int32()),
+                "h": pa.array([1] * rows, pa.int32()),
+                "fmt": pa.array(["png"] * rows),
+                "caption": pa.array([f"caption {j}" for j in range(rows)]),
+            }
+        )
+        if drop is not None and i == n_files - 1:
+            tbl = tbl.drop_columns([drop])
+        files.append(os.path.join(path, f"part-{i}.parquet"))
+        pq.write_table(tbl, files[-1])
+    return files
+
+
+def test_decode_scan_plan_is_one_range_wave(spark, tmp_path):
+    """The scan's tasks come from ``spark.range``: no file-list
+    DataFrame (an ExistingRDD scan fed by a PythonRDD job) and no
+    exchange.  A small corpus runs one task per core (local[4]), and
+    never more tasks than files."""
+    from sparkclean.images.decode import decode_scan
+
+    path = str(tmp_path / "eight")
+    _write_scan_files(path, 8, 512)
+    df = decode_scan(spark, path, with_caption_features=True)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Range" in plan, plan
+    assert "Exchange" not in plan and "ExistingRDD" not in plan, plan
+    assert df.rdd.getNumPartitions() == 4
+    assert df.count() == 8 * 512
+    assert df.select("image_id").distinct().count() == 8 * 512
+
+    two = str(tmp_path / "two")
+    _write_scan_files(two, 2, 512)
+    assert decode_scan(spark, two).rdd.getNumPartitions() == 2
+
+
+@pytest.mark.parametrize(
+    "n_files, rows0, par, want",
+    [
+        (8, 512, 4, 4),       # perfbench images: one wave, one task per core
+        (2, 512, 4, 2),       # never more tasks than files
+        (256, 938, 32, 128),  # bench.py sf0.1: 4·par tasks of 2 files each
+        (256, 2048, 4, 16),   # capped at 4·par
+        (100, 5000, 4, 15),   # 16 tasks or 15: the longest reads 7 files
+    ],
+)
+def test_scan_task_count(n_files, rows0, par, want):
+    """decode_scan's task count: one task per core for a small corpus,
+    at most 4·par and the file count, and an even split (the fewest
+    tasks whose longest one reads as many files as before)."""
+    from sparkclean.images.decode import _scan_tasks
+
+    n = _scan_tasks(n_files, rows0, par)
+    assert n == want
+    loads = [len(range(i, n_files, n)) for i in range(n)]
+    assert max(loads) - min(loads) <= 1 and min(loads) >= 1
+
+
+@pytest.mark.parametrize("fault", ["truncated", "deleted", "missing_column"])
+def test_decode_scan_bad_file_fails_naming_it(spark, tmp_path, fault):
+    """An unreadable file fails the job (it is not a degenerate image:
+    dropping its rows would change the counters with no error), and the
+    error names the file, and the column when one is missing."""
+    from sparkclean.images.decode import decode_scan
+
+    path = str(tmp_path / fault)
+    files = _write_scan_files(path, 3, 20, drop="caption" if fault == "missing_column" else None)
+    bad = files[-1]
+    if fault == "truncated":
+        with open(bad, "r+b") as f:
+            f.truncate(os.path.getsize(bad) // 2)
+    df = decode_scan(spark, path)
+    if fault == "deleted":
+        os.remove(bad)
+    with pytest.raises(Exception) as err:
+        df.collect()
+    msg = str(err.value)
+    assert bad in msg, msg[-2000:]
+    if fault == "missing_column":
+        assert "'caption'" in msg, msg[-2000:]
+
+
 def test_checkpoint_resume(spark, corpus, tmp_path):
     out_dir = str(tmp_path / "ckpt")
     scored = run_image_caption_quality(corpus)

@@ -40,6 +40,31 @@ def test_inspector_threshold_batch_invariance(spark, corpus):
     np.testing.assert_allclose(insp1.thresholds(), want, rtol=1e-12)
 
 
+def test_inspector_thresholds_fill_missing_class_like_batch(spark, corpus):
+    """On a batch with one class absent, the inspector's thresholds equal
+    get_confident_thresholds on the same frame: the absent class gets
+    MISSING_CLASS_THRESHOLD from the one shared finishing step."""
+    from sparkclean.constants import MISSING_CLASS_THRESHOLD
+
+    full = spark.read.parquet(corpus)
+    labelled = caption_label_frame(full, "caption")
+    counts = {r["label"]: r["count"] for r in labelled.groupBy("label").count().collect()}
+    absent = max(counts, key=counts.get)
+    keep = [
+        r["image_id"]
+        for r in labelled.where(F.col("label") != absent).select("image_id").collect()
+    ]
+    batch = full.where(F.col("image_id").isin(keep))
+
+    insp = StreamingLabelInspector()
+    insp.process_batch(batch)
+    want = get_confident_thresholds(caption_label_frame(batch, "caption"), 3)
+    assert want[absent] == MISSING_CLASS_THRESHOLD
+    assert insp.thresholds()[absent] == MISSING_CLASS_THRESHOLD
+    np.testing.assert_allclose(insp.thresholds(), want, rtol=1e-12)
+    insp.release_batch_cache()
+
+
 def test_score_stream_available_now(spark, corpus, tmp_path):
     """Real streaming query: parquet source → stateless scoring →
     memory sink, one availableNow trigger.  Streaming and batch share
