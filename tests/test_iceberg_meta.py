@@ -459,8 +459,12 @@ def test_spark_schema_of_matches_spark_read(spark, tmp_path):
     """The schema the first commit registers equals what
     ``spark.read.parquet`` reports, for a Spark-written file (read from
     its footer: a non-nullable column, an array<double>, structs and a
-    map, all reported nullable) and a pyarrow-written one (no Spark
-    schema in the footer: the spark.read fallback)."""
+    map, all reported nullable), a checkpoint-written one from the same
+    columns plus a pre-Gregorian date (the Spark schema in its footer,
+    no ``ARROW:schema`` copy, rows read back equal), and a
+    pyarrow-written one (no Spark schema in the footer: the spark.read
+    fallback)."""
+    import datetime
     import glob as _glob
 
     import pyarrow as pa
@@ -470,15 +474,30 @@ def test_spark_schema_of_matches_spark_read(spark, tmp_path):
 
     key = b"org.apache.spark.sql.parquet.row.metadata"
     sdir = str(tmp_path / "spark_written")
-    spark.createDataFrame(
+    rows = spark.createDataFrame(
         [(1, [0.5, None], (1, [2]), {"k": 2.0}, b"\x01")],
         "id long not null, emb array<double>, s struct<a:int not null, b:array<int>>, "
         "m map<string,double>, payload binary",
-    ).coalesce(1).write.parquet(sdir)
+    )
+    rows.coalesce(1).write.parquet(sdir)
     sfile = _glob.glob(os.path.join(sdir, "*.parquet"))[0]
     stored = json.loads(pq.read_metadata(sfile).metadata[key])
     assert stored["fields"][0]["nullable"] is False
     assert _spark_schema_of(spark, sfile) == spark.read.parquet(sfile).schema
+
+    from sparkclean.checkpoint import run_checkpointed
+
+    cdir = str(tmp_path / "checkpoint_written")
+    dated = rows.withColumn("d", F.expr("date '1000-01-01'"))
+    run_checkpointed(dated, cdir, id_col="id", n_buckets=1)
+    (cfile,) = _glob.glob(os.path.join(cdir, "_bucket=0", "*.parquet"))
+    footer = pq.read_metadata(cfile).metadata
+    assert b"ARROW:schema" not in footer
+    assert json.loads(footer[key]) == json.loads(dated.schema.json())
+    assert _spark_schema_of(spark, cfile) == spark.read.parquet(cfile).schema
+    back = spark.read.parquet(cfile).collect()
+    assert back == dated.collect()
+    assert back[0]["d"] == datetime.date(1000, 1, 1)
 
     afile = str(tmp_path / "arrow_written.parquet")
     pq.write_table(

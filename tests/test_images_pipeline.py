@@ -443,12 +443,27 @@ def _without_times(manifest):
 
 def test_checkpoint_writes_one_file_per_bucket(spark, tmp_path):
     """The write is clustered by bucket: each bucket is ONE parquet file
-    however many input partitions fed it, and no cache is left behind."""
+    however many input partitions fed it, written and counted in at
+    most 2 Spark jobs (the bucket exchange and the writing stage).  No
+    cache and no temp file is left behind, and a temp file a killed
+    earlier run left in a bucket directory is removed."""
     out = str(tmp_path / "ckpt")
-    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
-    m = run_checkpointed(_ckpt_input(spark), out, n_buckets=16)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
+    stale_dir = os.path.join(out, "_bucket=3")
+    os.makedirs(stale_dir)
+    stale_tmp = os.path.join(stale_dir, ".part-0123456789abcdef-3.deadbeef.tmp")
+    open(stale_tmp, "wb").close()
+    sc = spark.sparkContext
+    persistent = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup("run_checkpointed_probe", "run_checkpointed")
+    try:
+        m = run_checkpointed(_ckpt_input(spark), out, n_buckets=16)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("run_checkpointed_probe")) <= 2
+    assert sc._jsc.getPersistentRDDs().size() == persistent
     _assert_one_file_per_bucket(out, 16)
+    assert not os.path.exists(stale_tmp)
+    assert glob.glob(os.path.join(out, "_bucket=*", ".*")) == []
     assert m["counters"] == {
         "rows_scored": 500,
         "rows_kept": 250,
@@ -456,11 +471,54 @@ def test_checkpoint_writes_one_file_per_bucket(spark, tmp_path):
     }
 
 
+def test_checkpoint_counters_describe_the_rows_written(spark, tmp_path):
+    """The manifest counts the rows the checkpoint wrote, even when the
+    frame would not recompute to the same rows: ``keep`` here is a
+    random draw per row, so a second counting pass would disagree with
+    the files."""
+    import random
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    coin = F.udf(lambda _: random.random() < 0.5, "boolean").asNondeterministic()
+    df = (
+        spark.range(0, 500, numPartitions=6)
+        .select(F.col("id").alias("image_id"), coin("id").alias("keep"))
+        .withColumn("drop_reason", F.when(~F.col("keep"), F.lit("low_quality")))
+    )
+    out = str(tmp_path / "ckpt")
+    m = run_checkpointed(df, out, n_buckets=16)
+    for b, rec in m["buckets"].items():
+        (f,) = glob.glob(os.path.join(out, f"_bucket={b}", "*.parquet"))
+        t = pq.read_table(f).to_pydict()
+        assert rec["rows"] == len(t["image_id"]), b
+        assert rec["kept"] == sum(t["keep"]), b
+        assert rec["dropped_by_rule"] == Counter(r for r in t["drop_reason"] if r), b
+    assert m["counters"]["rows_scored"] == 500
+
+
+@pytest.mark.parametrize("scheme", ["hdfs", "s3a", "file"])
+def test_checkpoint_rejects_uri_output_dir(spark, tmp_path, monkeypatch, scheme):
+    """The writer and the manifest use ``os`` on ``output_dir``, so a
+    URI is refused before anything is written (the manifest used to land
+    in a local directory literally named ``hdfs:`` or ``file:``)."""
+    uri = {
+        "hdfs": "hdfs://localhost:1/out",
+        "s3a": "s3a://bucket/out",
+        "file": f"file://{tmp_path}/out",
+    }[scheme]
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match=re.escape(uri)):
+        run_checkpointed(_ckpt_input(spark), uri, n_buckets=4)
+    assert os.listdir(tmp_path) == []
+
+
 def test_checkpoint_resume_after_kill_before_manifest_save(spark, tmp_path, monkeypatch):
     """A run killed between the bucket write and the manifest save leaves
     files no manifest records.  The rerun must rewrite those buckets in
-    place (dynamic overwrite replaces the stale files, it does not add
-    beside them) and end exactly where a single-shot run does."""
+    place (the rewrite removes the stale files, it does not add beside
+    them) and end exactly where a single-shot run does."""
     df = _ckpt_input(spark)
     out = str(tmp_path / "killed")
     save = ckpt._save_manifest
