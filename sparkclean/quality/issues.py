@@ -10,9 +10,11 @@ Branch → Spark plan:
 * low_self_confidence /
   low_normalized_margin — n = the off-diagonal issue count (one fused
                          issue-count + row-count aggregation), then exact
-                         bottom-n by (score, id) via a quantile-banded
-                         selection (no global single-partition sort; see
-                         :func:`bottom_n_flags`).
+                         bottom-n by (score, id): the row at rank n from
+                         the one rank selection in stats.py
+                         (``stats.rows_at_ranks``; no global
+                         single-partition sort), then a cutoff predicate
+                         (:func:`bottom_n_flags`).
 * prune_by_class       — per-class bottom-m via Window.partitionBy(label).
 * prune_by_noise_rate  — per (given k, candidate j) top-c margins via a
                          broadcast join against the K×K prune-count matrix
@@ -157,24 +159,16 @@ def bottom_n_flags(
     id_col: str,
     flag_col: str = "is_label_issue",
     total: int | None = None,
-    task_cap: int | None = None,
 ) -> DataFrame:
     """Flag exactly the first n rows in (score ASC NULLS LAST, id ASC)
     order — the SQL twins' ``row_number() OVER (...) <= n``.
 
-    Scale strategy: a global single-partition window would serialise the
-    whole table through one task.  Instead: (1) bound a quantile band
-    around the cutoff with ``approxQuantile``; (2) rows strictly below
-    the band are flagged by predicate alone; (3) only the (small) band
-    is ranked — if ties at the cutoff inflate the measured band past
-    ``task_cap``, the cutoff comes from the range-partitioned exact
-    selection (stats._rows_at_ranks_selection) instead of a single-task
-    window; (4) the result is a pure predicate — no join, no broadcast.
-    At 100 TB no task ever sorts more than ~max(band/P, task_cap) rows,
-    regardless of the score distribution.  When ``total`` fits the task
-    budget the band is every row: one rank job, no approxQuantile and no
-    band count.  When n passes the non-null scores, the band is the
-    NULL-score tail, ranked by id.
+    The row at rank n comes from ``stats.rows_at_ranks`` (one direct
+    rank job when ``total`` fits the band budget, else a quantile band
+    ranked without a data-sized single-task sort); the flag is
+    then a pure predicate on that (score, id) cutoff — no join, no
+    broadcast.  Past the non-null scores the cutoff is a NULL-score row
+    and every non-null score is flagged.
     """
     if total is None:
         total = df.count()
@@ -183,75 +177,11 @@ def bottom_n_flags(
     if n >= total:
         return df.withColumn(flag_col, F.lit(True))
 
-    from ..stats import (
-        _BAND_TARGET_ROWS,
-        _adaptive_err,
-        _rows_at_ranks_selection,
-    )
+    from ..stats import rows_at_ranks
 
+    cut = rows_at_ranks(df, score_col, [id_col], {n}, total)[n]
+    s_star, id_star = cut[score_col], cut[id_col]
     score, rid = F.col(score_col), F.col(id_col)
-    cap = task_cap if task_cap is not None else _BAND_TARGET_ROWS
-    if total <= cap:
-        # the band path would rank up to this many rows in one task anyway
-        band, r, c_band = df, n, total
-    else:
-        # band half-width shrinks with the data so the single-task band
-        # rank stays ≤ ~2e6 rows at ANY corpus size (see stats._adaptive_err)
-        frac = n / total
-        err = min(0.005, _adaptive_err(total, None) * 2.5)
-        lo_q, hi_q = max(0.0, frac - 2 * err), min(1.0, frac + 2 * err)
-        # no quantiles when every score is NULL: all counts below read 0
-        # and the band becomes the NULL-score tail
-        lo, hi = df.approxQuantile(score_col, [lo_q, hi_q], err / 2) or (None, None)
-
-        # ONE agg measures the band's ACTUAL size along with the below-count:
-        # heavy ties at the cutoff can inflate the true band far past the
-        # 2·err·N estimate without tripping the overshoot branch at all
-        cnt = df.agg(
-            F.count(F.when(score < lo, 1)).alias("_below"),
-            F.count(F.when((score >= lo) & (score <= hi), 1)).alias("_band"),
-            F.count(score).alias("_nn"),
-        ).first()
-        c_below, c_band, c_nonnull = int(cnt["_below"]), int(cnt["_band"]), int(cnt["_nn"])
-        band_cond = (score >= F.lit(lo)) & (score <= F.lit(hi))
-        if c_below > n:
-            # quantile estimate overshot (heavy ties) — extend band downward
-            band_cond = score <= F.lit(hi)
-            c_band += c_below
-            c_below = 0
-        r = n - c_below
-        if r <= 0:
-            return df.withColumn(flag_col, F.coalesce(score < F.lit(lo), F.lit(False)))
-        if r > c_band:
-            if n > c_nonnull:
-                # the cutoff lies in the NULLS-LAST tail: every non-null
-                # score is flagged and the NULL-score rows rank by id
-                band_cond = score.isNull()
-                r, c_band = n - c_nonnull, total - c_nonnull
-            else:
-                # upper estimate undershot — extend band upward
-                band_cond = (score >= F.lit(lo)) if c_below else score.isNotNull()
-                c_band = c_nonnull - c_below
-        band = df.where(band_cond)
-
-    # rank only the band to find the exact r-th (score, id) cutoff, then
-    # flag with a pure predicate — zero joins, one final pass.  A band
-    # within the task budget ranks through one (tiny) task; a bigger one
-    # (tie blocks, error floor) routes to the range-partitioned exact
-    # selection, which never sorts a data-sized band in one task.
-    if c_band <= cap:
-        w = Window.orderBy(score.asc_nulls_last(), rid.asc())
-        s_star, id_star = (
-            band.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == F.lit(r))
-            .select(score_col, id_col)
-            .collect()[0]
-        )
-    else:
-        row = _rows_at_ranks_selection(
-            band.select(score_col, id_col), [score_col, id_col], {r}, cap
-        )[r]
-        s_star, id_star = row[score_col], row[id_col]
     if s_star is None:
         return df.withColumn(flag_col, score.isNotNull() | (rid <= F.lit(id_star)))
     # coalesce: a NULL score ranks after every non-null one, so below a

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -13,6 +14,19 @@ def spark():
     s = get_spark("sparkclean-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started) — counted through a job
+    group, so jobs of other threads do not count."""
+    sc = spark.sparkContext
+    group = f"spark_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def probs_df(spark, labels, probs, id_start=0):

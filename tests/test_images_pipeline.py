@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import spark_jobs
 from sparkclean import checkpoint as ckpt
 from sparkclean import synth
 from sparkclean.checkpoint import load_manifest, run_checkpointed
@@ -159,6 +160,16 @@ def test_decode_scan_matches_dataframe_path(spark, corpus, tmp_path):
         assert ra == rb
     nulls = [r for r in a if r["image_id"] in null_ids]
     assert len(nulls) == 2 and all(r["scrubbed_text"] is None for r in nulls)
+
+
+def test_from_path_route_job_ceiling(spark, corpus, tmp_path):
+    """The python-native scan route on the test corpus starts at most 6
+    Spark jobs in the call (the scoring passes; the output frame is
+    lazy)."""
+    path = str(tmp_path / "corpus")
+    corpus.repartition(8).write.parquet(path)
+    _, jobs = spark_jobs(spark, lambda: run_image_caption_quality_from_path(spark, path))
+    assert jobs <= 6
 
 
 def test_decode_scan_honours_text_col(spark, corpus, tmp_path):

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 import ref_impl as R
-from conftest import probs_df
+from conftest import probs_df, spark_jobs
 from sparkclean.quality import (
     compute_confident_joint,
     find_label_issues,
@@ -183,6 +183,23 @@ def test_batched_matches_low_self_confidence(spark, fixture_np, fixture_df):
     assert union == 0 or inter / union > 0.95
     # thorough mode reproduces the exact low_self_confidence selection
     assert np.array_equal(got, exact)
+
+
+def test_find_label_issues_low_self_confidence_job_ceiling(spark):
+    """On 2000 cached rows the low_self_confidence call is the
+    thresholds, the fused issue/row count and ONE direct bottom-n rank:
+    at most 6 Spark jobs."""
+    rng = np.random.default_rng(5)
+    n = 2000
+    df = probs_df(spark, rng.integers(0, 10, n), rng.dirichlet(np.ones(10), n)).cache()
+    df.count()
+    try:
+        _, jobs = spark_jobs(
+            spark, lambda: find_label_issues(df, 10, filter_by="low_self_confidence")
+        )
+        assert jobs <= 6
+    finally:
+        df.unpersist()
 
 
 @pytest.mark.parametrize("data", ["noisy", "flat"])

@@ -2,6 +2,7 @@
 the round-3 plan guarantees: no exact Percentile aggregate and no
 unpartitioned global window in the feature-space scale paths."""
 
+import math
 import re
 
 import numpy as np
@@ -9,6 +10,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+import sparkclean.stats as stats
+from conftest import spark_jobs
 from sparkclean.stats import exact_median, exact_quantile, global_row_number
 
 
@@ -57,30 +60,32 @@ def test_exact_quantile_empty_and_singleton(spark):
     assert exact_quantile(one, "v", 0.9) == 42.0
 
 
-def test_values_at_ranks_recursive_refinement(spark):
+def _values_at_ranks(df, need, n, err):
+    """The key of ``df._v`` at each rank, through the one rank selection."""
+    return {k: r["_v"] for k, r in stats.rows_at_ranks(df, "_v", [], need, n, err).items()}
+
+
+def test_values_at_ranks_recursive_refinement(spark, monkeypatch):
     """Force the two-stage band refinement (the n > ~10^13 path where
     the error floor makes the first band exceed the single-task target)
-    by shrinking band_target and widening err — results must equal the
-    exact order statistics at every level of recursion."""
-    from sparkclean.stats import _values_at_ranks
-
+    by shrinking the band budget and widening err — results must equal
+    the exact order statistics at every level of recursion."""
+    monkeypatch.setattr(stats, "_BAND_TARGET_ROWS", 100)
     rng = np.random.default_rng(11)
     data = rng.normal(0, 1, 2000)
     df = spark.createDataFrame([(float(v),) for v in data], "_v: double")
     want = np.sort(data)
     need = {1, 500, 1500, 2000}
-    got = _values_at_ranks(df, need, 2000, err=0.1, band_target=100)
+    got = _values_at_ranks(df, need, 2000, err=0.1)
     assert set(got) == need
     for k in need:
         assert got[k] == want[k - 1], k
 
 
-def test_values_at_ranks_randomized_matrix(spark):
-    """Randomized sweep over (distribution, rank set, err, band_target)
+def test_values_at_ranks_randomized_matrix(spark, monkeypatch):
+    """Randomized sweep over (distribution, rank set, err, band budget)
     including tie-heavy data and forced multi-level recursion — every
     returned value must equal the NumPy order statistic."""
-    from sparkclean.stats import _values_at_ranks
-
     rng = np.random.default_rng(29)
     for trial in range(6):
         n = int(rng.integers(50, 1200))
@@ -98,15 +103,14 @@ def test_values_at_ranks_randomized_matrix(spark):
         )
         err = float(rng.choice([None, 0.05, 0.2], p=[0.4, 0.3, 0.3]) or 0) or None
         band_target = int(rng.choice([50, 10**6]))
-        got = _values_at_ranks(df, ranks, n, err, band_target)
+        monkeypatch.setattr(stats, "_BAND_TARGET_ROWS", band_target)
+        got = _values_at_ranks(df, ranks, n, err)
         assert set(got) == ranks, (trial, ranks, got)
         for k in ranks:
             assert got[k] == want[k - 1], (trial, n, k, err, band_target)
 
 
 def test_exact_quantile_with_forced_recursion(spark):
-    import sparkclean.stats as stats
-
     rng = np.random.default_rng(13)
     data = rng.uniform(-5, 5, 3000)
     df = spark.createDataFrame([(float(v),) for v in data], "v: double")
@@ -118,6 +122,41 @@ def test_exact_quantile_with_forced_recursion(spark):
     finally:
         stats._BAND_TARGET_ROWS = old
     assert got == want
+
+
+@pytest.mark.parametrize("q", [1.5, -0.1, float("nan")])
+def test_exact_quantile_rejects_q_outside_unit_interval(spark, values, q):
+    """Spark's ``percentile`` rejects q outside [0, 1]; so does
+    exact_quantile, naming q, before it starts any Spark job."""
+    def call():
+        with pytest.raises(ValueError, match=r"\bq\b"):
+            exact_quantile(values, "v", q)
+
+    _, jobs = spark_jobs(spark, call)
+    assert jobs == 0
+
+
+def test_small_rank_paths_job_ceilings(spark):
+    """Within the band budget the rank selection is one direct window
+    rank: bottom_n_flags with ``total`` given is ONE Spark job, and
+    exact_median on 2000 rows at most 4 (its count, then the rank)."""
+    from sparkclean.quality.issues import bottom_n_flags
+
+    rng = np.random.default_rng(5)
+    n = 2000
+    df = spark.createDataFrame(
+        [(i, float(s)) for i, s in enumerate(rng.uniform(0, 1, n))],
+        "id: long, score: double",
+    ).cache()
+    df.count()
+    try:
+        _, jobs = spark_jobs(spark, lambda: bottom_n_flags(df, 300, "score", "id", total=n))
+        assert jobs == 1
+        median, jobs = spark_jobs(spark, lambda: exact_median(df, "score"))
+        assert jobs <= 4
+        assert median == df.agg(F.expr("percentile(score, 0.5)")).first()[0]
+    finally:
+        df.unpersist()
 
 
 def test_global_row_number_matches_unpartitioned_window(values):
@@ -199,14 +238,13 @@ def test_no_exact_percentile_in_scale_paths(spark):
     assert "Percentile" not in plan, "exact Percentile aggregate leaked into plan"
 
 
-def test_values_at_ranks_heavy_ties_capped_band(spark):
+def test_values_at_ranks_heavy_ties_capped_band(spark, monkeypatch):
     """Adversarial tie block at the band edge: ≥40% of rows share one
-    value straddling the needed ranks.  With a tiny band_target the
+    value straddling the needed ranks.  With a tiny band budget the
     measured-band router must take the range-partitioned selection path
     (never a data-sized single-task rank) and still return the exact
     order statistics."""
-    import sparkclean.stats as stats
-
+    monkeypatch.setattr(stats, "_BAND_TARGET_ROWS", 50)
     rng = np.random.default_rng(41)
     n = 1200
     data = np.concatenate(
@@ -219,13 +257,13 @@ def test_values_at_ranks_heavy_ties_capped_band(spark):
     calls = []
     orig = stats._rows_at_ranks_selection
 
-    def spy(df_, cols, ranks, cap, depth=0):
-        calls.append((sorted(ranks), cap, depth))
-        return orig(df_, cols, ranks, cap, depth)
+    def spy(df_, cols, ranks, depth=0):
+        calls.append((sorted(ranks), depth))
+        return orig(df_, cols, ranks, depth)
 
     stats._rows_at_ranks_selection = spy
     try:
-        got = stats._values_at_ranks(df, need, n, err=0.02, band_target=50)
+        got = _values_at_ranks(df, need, n, err=0.02)
     finally:
         stats._rows_at_ranks_selection = orig
     for k in need:
@@ -233,12 +271,11 @@ def test_values_at_ranks_heavy_ties_capped_band(spark):
     assert calls, "tie-inflated band must route through the selection path"
 
 
-def test_rows_at_ranks_selection_direct(spark):
+def test_rows_at_ranks_selection_direct(spark, monkeypatch):
     """The selection primitive itself: tie-heavy data, multiple ranks,
-    forced recursion via a tiny cap — rows must match NumPy order
-    statistics under the (v, id) total order."""
-    from sparkclean.stats import _rows_at_ranks_selection
-
+    forced recursion via a tiny band budget — rows must match NumPy
+    order statistics under the (v, id) total order."""
+    monkeypatch.setattr(stats, "_BAND_TARGET_ROWS", 40)
     rng = np.random.default_rng(43)
     n = 800
     vals = np.concatenate([np.zeros(n // 2), rng.integers(0, 6, n - n // 2)]).astype(float)
@@ -248,17 +285,30 @@ def test_rows_at_ranks_selection_direct(spark):
     )
     order = np.lexsort((ids, vals))
     need = {1, 5, n // 2, n // 2 + 1, n - 1, n}
-    got = _rows_at_ranks_selection(df, ["v", "id"], need, band_target=40)
+    got = stats._rows_at_ranks_selection(df, ["v", "id"], need)
     for k in need:
         i = order[k - 1]
         assert (got[k]["v"], got[k]["id"]) == (vals[i], ids[i]), k
 
 
-def test_bottom_n_flags_fast_path_matches_band(spark):
+def _bottom_n_ref(rows, n):
+    """ids of the first n rows by (score ASC, id ASC), Spark's order:
+    NaN after every number, NULL last."""
+    def key(r):
+        i, sc = r
+        if sc is None:
+            return (2, 0.0, i)
+        return (1, 0.0, i) if math.isnan(sc) else (0, sc, i)
+
+    return {i for i, _ in sorted(rows, key=key)[:n]}
+
+
+def test_bottom_n_flags_fast_path_matches_band(spark, monkeypatch):
     """The r6 small-input fast path (one direct rank job when total fits
     the band task budget) must flag exactly the same rows as the banded
-    quantile path — including tie blocks at the cutoff and null scores
-    (never flagged, NULLS-LAST like the SQL twins)."""
+    quantile path — including tie blocks at the cutoff, NaN scores
+    (after every number, before NULL) and null scores (never flagged,
+    NULLS-LAST like the SQL twins)."""
     from sparkclean.quality.issues import bottom_n_flags
 
     rng = np.random.default_rng(11)
@@ -268,31 +318,37 @@ def test_bottom_n_flags_fast_path_matches_band(spark):
     ids = rng.permutation(n_rows)
     rows = [(int(i), float(s)) for i, s in zip(ids, scores)]
     rows += [(10_000 + j, None) for j in range(5)]  # null scores
-    df = spark.createDataFrame(rows, "id: long, score: double")
-    for n_flag in (1, 120, 499):
-        fast = {
-            r["id"]
-            for r in bottom_n_flags(df, n_flag, "score", "id")
-            .where(F.col("is_label_issue"))
-            .collect()
-        }
-        band = {
-            r["id"]
-            for r in bottom_n_flags(df, n_flag, "score", "id", task_cap=40)
-            .where(F.col("is_label_issue"))
-            .collect()
-        }
-        assert fast == band, n_flag
-        assert len(fast) == n_flag
-        assert all(i < 10_000 for i in fast), "null scores must never flag"
+    nan_scores = rng.uniform(0, 1, 400)
+    nan_scores[::20] = np.nan
+    nan_rows = [(int(i), float(s)) for i, s in zip(rng.permutation(400), nan_scores)]
+    nan_rows += [(10_000 + j, None) for j in range(5)]
+    budget = stats._BAND_TARGET_ROWS
+    for data, n_flags in ((rows, (1, 120, 499)), (nan_rows, (10, 200, 385, 395, 400))):
+        df = spark.createDataFrame(data, "id: long, score: double")
+        for n_flag in n_flags:
+            flagged = []
+            for cap in (budget, 40):
+                monkeypatch.setattr(stats, "_BAND_TARGET_ROWS", cap)
+                flagged.append({
+                    r["id"]
+                    for r in bottom_n_flags(df, n_flag, "score", "id")
+                    .where(F.col("is_label_issue"))
+                    .collect()
+                })
+            fast, band = flagged
+            assert fast == band, n_flag
+            assert len(fast) == n_flag
+            assert all(i < 10_000 for i in fast), "null scores must never flag"
+            assert fast == _bottom_n_ref(data, n_flag), n_flag
 
 
-def test_bottom_n_flags_heavy_ties_capped(spark):
+def test_bottom_n_flags_heavy_ties_capped(spark, monkeypatch):
     """bottom_n_flags with the cutoff inside a 40% tie block and a tiny
-    task_cap: flags must still be exactly the n smallest (score, id)
+    band budget: flags must still be exactly the n smallest (score, id)
     pairs — via the selection path, not a data-sized window."""
     from sparkclean.quality.issues import bottom_n_flags
 
+    monkeypatch.setattr(stats, "_BAND_TARGET_ROWS", 50)
     rng = np.random.default_rng(47)
     n_rows = 1000
     scores = np.concatenate(
@@ -306,9 +362,9 @@ def test_bottom_n_flags_heavy_ties_capped(spark):
     for n_flag in (300, 500, 650):
         got = {
             r["id"]
-            for r in bottom_n_flags(
-                df, n_flag, "score", "id", task_cap=50
-            ).where(F.col("is_label_issue")).collect()
+            for r in bottom_n_flags(df, n_flag, "score", "id")
+            .where(F.col("is_label_issue"))
+            .collect()
         }
         order = np.lexsort((ids, scores))
         want = {int(ids[i]) for i in order[:n_flag]}
@@ -320,7 +376,7 @@ def test_bottom_n_flags_heavy_ties_capped(spark):
     [[0.4, None, 0.1, 0.4, None, 0.9, 0.2, None, 0.4, 0.7], [None] * 6],
     ids=["some_null", "all_null"],
 )
-def test_bottom_n_flags_past_non_null_scores_matches_duckdb(spark, scores):
+def test_bottom_n_flags_past_non_null_scores_matches_duckdb(spark, monkeypatch, scores):
     """n above the non-null score count: the flags are the SQL twins'
     ``row_number() OVER (ORDER BY score ASC NULLS LAST, id ASC) <= n`` —
     every non-null score, then the NULL-score rows by id — on the
@@ -335,6 +391,7 @@ def test_bottom_n_flags_past_non_null_scores_matches_duckdb(spark, scores):
     con = duckdb.connect()
     con.execute("CREATE TABLE t (id BIGINT, score DOUBLE)")
     con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    budget = stats._BAND_TARGET_ROWS
     for n in range(len(rows) + 1):
         want = {
             r[0]
@@ -344,10 +401,11 @@ def test_bottom_n_flags_past_non_null_scores_matches_duckdb(spark, scores):
                 f"WHERE rn <= {n}"
             ).fetchall()
         }
-        for cap in (None, 4):
+        for cap in (budget, 4):
+            monkeypatch.setattr(stats, "_BAND_TARGET_ROWS", cap)
             flags = {
                 r["id"]: r["is_label_issue"]
-                for r in bottom_n_flags(df, n, "score", "id", task_cap=cap).collect()
+                for r in bottom_n_flags(df, n, "score", "id").collect()
             }
             assert None not in flags.values(), (n, cap)
             assert {i for i, f in flags.items() if f} == want, (n, cap)
